@@ -272,13 +272,8 @@ def bench_ann_split(bt: BlockTimer, sf_dir: str):
     walls), so this block measures the serving MACHINERY round over
     round, not the default's changing workload.
 
-    r12 OPTIMIZATION round: the build runs the BLAS assignment paths
-    (coarse_assign="blas", pq_assign="blas") — value-identical to the
-    expr paths at this exact dial (index/cents/probe compared
-    bit-for-bit at sf0.1 this round, and parity-tested both modes in
-    pytest), ~3x less machinery wall (guide §4.2: the per-row argmin
-    moves to numpy over Arrow batches). Registered members keep the
-    expr default (lazy plans)."""
+    The build's Lloyd assignments run as numpy over Arrow batches
+    (guide §4.2), the module's only assignment kernel."""
     from japanstockdatapipeline_spark.operators.kmeans import (
         ivf_pq_build,
         ivf_pq_probe,
@@ -302,7 +297,6 @@ def bench_ann_split(bt: BlockTimer, sf_dir: str):
         index, cents = ivf_pq_build(
             emb, k_coarse=8, m=8, k_cells=16, residual=True,
             persisted_out=state["handles"],
-            coarse_assign="blas", pq_assign="blas",
         )
         state["index"] = index.persist()
         state["cents"] = cents.persist()

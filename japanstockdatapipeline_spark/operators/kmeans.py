@@ -1,37 +1,38 @@
-"""K-means coarse quantizer for IVF-style ANN (Lloyd iterations as
-pure DataFrame ops).
+"""K-means coarse quantizer, product quantization and the IVF-PQ
+index for ANN serving.
 
 The stress run in SCALE.md showed `ivf_topk` recall is bounded by the
 coarse quantizer: the testdata `label` column is geometrically random,
-so probed cells rarely contain the true neighbors. This operator
-builds GEOMETRIC cells: deterministic seeding (the k smallest ids),
-then `iters` Lloyd rounds. The plan is fully lazy (no driver loop over
-data, no plan-time job): the iteration count is a compile-time unroll,
-each round adding one shuffle (the centroid re-agg) — the classic
-distributed-k-means shape, scaling by rows like any aggregation.
+so probed cells rarely contain the true neighbors. This module builds
+GEOMETRIC cells: deterministic seeding (the k smallest ids), then
+`iters` Lloyd rounds.
 
-Scale shape (round-5 verdict fixes — both asserted by the plan audit):
+Shape: every Lloyd round is a driver loop over bounded collects.
   - SEEDING is `orderBy(id).limit(k)` — a distributed partial top-k
     (TakeOrdered / LocalLimit-per-partition), NOT a row_number window
-    over the full corpus. The only single-partition hop moves <= k
-    rows (the seed collapse), never the data.
-  - ASSIGNMENT is an expression-level argmax over a BROADCAST
-    one-row centroid array: each corpus row scores all k centroids
-    inside one projected expression (array_max over transform), so a
-    Lloyd round adds ZERO corpus shuffle — no corpus x k row blowup,
-    no per-id window rank. The one-row centroid side is collapsed
-    with a k-row aggregate and broadcast (same 1-row-agg-broadcast
-    shape as the winsorize pipeline F6).
+    over the full corpus; its k rows are collected.
+  - ASSIGNMENT is one mapInArrow pass: each Arrow batch's vectors are
+    one flat float64 buffer, scored against the driver's centroid
+    matrix with one numpy matmul — no corpus shuffle, no corpus x k
+    row blowup, no per-id window rank.
+  - RECOMPUTE is the Spark per-cell elementwise mean (`_centroids_of`,
+    one shuffle), collected: k centroid rows (m x k sub-centroids for
+    PQ) per round, never the corpus.
+So building a k-means or PQ frame runs those bounded jobs eagerly;
+the returned frame is the final assignment pass, closing over driver
+centroids only.
 
-Determinism (oracle-portability): argmax compares cosines ROUNDED to
-6 dp with ascending cell id as tie-break (encoded as max over
-struct(cos, -cell)), so Spark and the SQL oracle (which may
-accumulate dot products in a different order) always pick the same
-cell even for near-ties.
+Determinism (oracle-portability): argmax compares cosines (argmin
+compares squared L2) ROUNDED half-up to 6 dp, with ascending cell id
+as tie-break, so Spark and the SQL oracle (which may accumulate dot
+products in a different order) always pick the same cell even for
+near-ties.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -56,16 +57,6 @@ def _centroids_of(
     )
 
 
-def _as_centroid_row(cents: DataFrame) -> DataFrame:
-    """Collapse the k (cell, __cvec) rows into ONE row holding the
-    cell-sorted centroid array — the broadcastable form `assign`
-    consumes. The global agg's single-partition hop moves <= k
-    pre-aggregated rows, never corpus data."""
-    return cents.agg(
-        F.array_sort(F.collect_list(F.struct("cell", "__cvec"))).alias("__cents")
-    )
-
-
 def _train_subset(v: DataFrame, id_col: str, n: int, salt: str) -> DataFrame:
     """Deterministic training sample: the n smallest rows by
     (md5(salt:id), id) — a pure function of the id set, so any engine
@@ -78,6 +69,84 @@ def _train_subset(v: DataFrame, id_col: str, n: int, salt: str) -> DataFrame:
     ).limit(n)
 
 
+def _vectors(vecs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return vecs.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("__v"))
+
+
+def _seed_matrix(train: DataFrame, id_col: str, k: int) -> np.ndarray:
+    """The k smallest ids' vectors in id order (row i seeds cell i):
+    a distributed partial top-k, k rows collected."""
+    rows = train.orderBy(F.col(id_col).asc()).limit(k).select("__v").collect()
+    return np.array([r["__v"] for r in rows], dtype=np.float64)
+
+
+def _half_up6(x: np.ndarray) -> np.ndarray:
+    """Round to 6 dp, halves away from zero — F.round's HALF_UP, so
+    the numpy argmax/argmin keys rank exactly like the SQL oracle's
+    round(…, 6) for every value the boundary canary certifies."""
+    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6 + 0.0  # -0.0 -> 0.0
+
+
+def _batch_matrix(col: pa.ListArray, dim: int, what: str) -> np.ndarray:
+    """One Arrow batch's vector column as an (n, dim) float64 matrix
+    over its flat buffer (flatten() honors slice offsets). Every row's
+    length is checked from the list offsets: a null or ragged row
+    would otherwise shift every later row of the batch, and a
+    batch-total check passes rows whose lengths cancel out."""
+    flat = col.flatten()
+    lengths = np.diff(col.offsets.to_numpy())
+    problem = None
+    if col.null_count:
+        problem = "a null row"
+    elif flat.null_count:
+        problem = "a null element"
+    elif (lengths != dim).any():
+        problem = f"a row of {lengths[lengths != dim][0]} elements"
+    if problem:
+        raise ValueError(
+            f"{what} needs non-null vectors of dim {dim}; the batch has {problem}"
+        )
+    return flat.to_numpy(zero_copy_only=False).reshape(len(col), dim)
+
+
+def _cosine_argmax(cells: list[int], C: np.ndarray):
+    """mapInArrow kernel for one Lloyd assignment over (id, __v)
+    batches: each row's cell is the argmax of its 6dp-rounded cosine
+    to the rows of C (first, i.e. min cell, wins ties). A zero-norm
+    vector or centroid has a NULL cosine in SQL, which loses every
+    comparison; an all-NULL row falls back to the first cell with
+    cell_cos NaN. The winner's cosine is emitted UNROUNDED: the
+    caller rounds it with F.round, where the boundary canary sees it."""
+    cn = np.linalg.norm(C, axis=1, keepdims=True)
+    zero_c = (cn == 0).ravel()
+    Cn = C / np.where(cn == 0, 1.0, cn)
+    cells_arr = np.asarray(cells, dtype=np.int32)
+    dim = C.shape[1]
+
+    def assign(batches):
+        for rb in batches:
+            n_rows = rb.num_rows
+            if n_rows == 0:
+                continue
+            X = _batch_matrix(rb.column(1), dim, "kmeans_cells")
+            xn = np.linalg.norm(X, axis=1, keepdims=True)
+            cos = (X / np.where(xn == 0, 1.0, xn)) @ Cn.T
+            cos[:, zero_c] = np.nan
+            cos[(xn == 0).ravel(), :] = np.nan
+            best = np.argmax(np.where(np.isnan(cos), -np.inf, _half_up6(cos)), axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0),
+                    pa.array(cells_arr[best]),
+                    pa.array(cos[np.arange(n_rows), best]),
+                    rb.column(1),
+                ],
+                names=[rb.schema.names[0], "cell", "cell_cos", "__v"],
+            )
+
+    return assign
+
+
 def kmeans_cells(
     vecs: DataFrame,
     k: int = 8,
@@ -85,256 +154,63 @@ def kmeans_cells(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_mode: str = "expr",
     train_sample: int | None = None,
 ) -> DataFrame:
     """Assign each vector to a k-means cell (cosine Lloyd iterations).
 
     Output: (vec_id, cell, cell_cos) — `cell` is the 0-based id of the
     winning centroid after the last assignment round, `cell_cos` the
-    rounded cosine to it. `iters` counts ASSIGNMENT rounds: seeds ->
-    assign -> [recompute -> assign] x (iters-1).
+    cosine to it rounded to 6 dp (NULL for a zero vector). `iters`
+    counts ASSIGNMENT rounds: seeds -> assign -> [recompute -> assign]
+    x (iters-1).
 
     Empty cells shrink away naturally (a centroid with no members
     drops out of the next round); the oracle replays the identical
     schedule, seeding, quantized argmax, and shrinkage.
 
-    `assign_mode` (r11 verdict #3): "expr" (default) keeps the whole
-    Lloyd schedule one lazy plan — zero plan-time jobs, the shape the
-    registered members need — but the argmax evaluates O(n*k*dim)
-    array expressions per round, which is the measured wall at
-    production k ~ sqrt(n) (k_coarse=447 cost 507 s vs 123 s at 64 on
-    the 200k corpus, STRESS_r10). "blas" runs the SAME schedule as a
-    driver loop: each round collects the k centroid rows (k*dim
-    doubles — bounded, never the corpus), assigns via one numpy
-    matmul per Arrow batch in mapInPandas, and recomputes centroids
-    with the identical Spark aggregation — value-identical cells
-    (same seeding, same 6dp HALF_UP argmax, same shrinkage; parity
-    asserted in tests) at BLAS assignment cost. Use "blas" from
-    build-time callers (index builds, stress); leave "expr" where the
-    plan must stay lazy.
+    Eager by design: each round collects k centroid rows (k*dim
+    doubles, never the corpus) and closes the next assignment pass
+    over them, so building the frame runs iters bounded jobs plus the
+    seed collect. The returned frame is the last assignment pass.
 
-    `train_sample` (r12 verdict #5, blas mode only): classic sampled
-    k-means training (Jégou et al. train quantizers on ~100k-1M
-    points) — the Lloyd TRAINING rounds run on the `train_sample`
-    smallest rows by (md5(id), id) (bit-pinned: a pure function of
-    the id set, so the selection replays identically anywhere), and
-    only the FINAL assignment pass touches the full corpus. With
+    `train_sample`: classic sampled k-means training (Jégou et al.
+    train quantizers on ~100k-1M points) — the Lloyd TRAINING rounds
+    run on the `train_sample` smallest rows by (md5(id), id)
+    (bit-pinned: a pure function of the id set, so the selection
+    replays identically anywhere, persisted while training), and only
+    the FINAL assignment pass touches the full corpus. With
     train_sample >= corpus size the schedule degenerates to the
-    unsampled one (identical values — parity-tested); at 2M vectors
-    it removes the corpus from every training round."""
-    v = vecs.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("__v"))
-    # deterministic seeds: the k smallest ids (distributed partial
-    # top-k, NOT a global window), cell = dense order by id
-    seed_row = (
-        v.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("__sid"), F.col("__v").alias("__cvec"))
-                )
-            ).alias("__s")
-        )
-        .select(
-            F.transform(
-                "__s",
-                lambda s, i: F.struct(i.alias("cell"), s["__cvec"].alias("__cvec")),
-            ).alias("__cents")
-        )
-    )
-
-    def assign(cent_row: DataFrame) -> DataFrame:
-        # expression-level argmax over the broadcast centroid array:
-        # the corpus row count never multiplies (the centroid side is
-        # ONE row), and no shuffle or window runs per round. Tie-break
-        # min cell encoded as max(struct(cos, -cell)); a NULL cosine
-        # (zero vector) sorts below any defined cosine, so an all-NULL
-        # row falls back to cell 0 — same as the previous window form
-        # and the oracle's ORDER BY cos DESC (NULLS LAST).
-        scored = F.transform(
-            "__cents",
-            lambda c: F.struct(
-                F.round(cosine_similarity(F.col("__v"), c["__cvec"]), 6).alias("cos"),
-                (-c["cell"]).alias("negcell"),
-            ),
-        )
-        return (
-            v.crossJoin(F.broadcast(cent_row))
-            .withColumn("__best", F.array_max(scored))
-            .select(
-                id_col,
-                (-F.col("__best.negcell")).alias("cell"),
-                F.col("__best.cos").alias("cell_cos"),
-                "__v",
-            )
-        )
-
+    unsampled one (identical values — tested); at 2M vectors it
+    removes the corpus from every training round."""
     if iters < 1:
-        # checked BEFORE dispatch: the expr path's range(iters - 1)
-        # would quietly still run one assignment and the blas loop
-        # would crash with an AttributeError — a parity break at the
-        # schedule edge (r11 advice)
         raise ValueError(f"iters must be >= 1, got {iters}")
-    if train_sample is not None and assign_mode != "blas":
-        raise ValueError("train_sample requires assign_mode='blas'")
-    if assign_mode == "blas":
-        return _kmeans_cells_blas(
-            v, k, iters, id_col=id_col, train_sample=train_sample
-        )
-    if assign_mode != "expr":
-        raise ValueError(f"assign_mode must be 'expr' or 'blas', got {assign_mode!r}")
-    a = assign(seed_row)
-    for _ in range(iters - 1):
-        a = assign(_as_centroid_row(_centroids_of(a, "__v")))
-    return a.select(id_col, "cell", "cell_cos")
-
-
-def _kmeans_cells_blas(
-    v: DataFrame,
-    k: int,
-    iters: int,
-    *,
-    id_col: str,
-    train_sample: int | None = None,
-) -> DataFrame:
-    """The BLAS Lloyd loop behind kmeans_cells(assign_mode="blas"):
-    identical schedule and values, numpy assignment. Each round's
-    centroid collect is k rows (bounded); the corpus is only ever
-    streamed through mapInPandas Arrow batches. The cosine is rounded
-    HALF-UP at 6dp with min-cell tie-break — sign-aware half-up
-    (cosines go negative) so boundary behavior matches F.round; the
-    canary certifies tested data sits clear of the boundaries the two
-    roundings could split.
-
-    With `train_sample`, Lloyd rounds 0..iters-2 assign only the
-    md5-pinned sample (persisted: each round's centroid recompute
-    re-executes its chain) and the FINAL round assigns the full
-    corpus with the sample-trained centroids — when the sample covers
-    the corpus this is exactly the unsampled schedule."""
-    import numpy as np
-    import pyarrow as pa
-
+    v = _vectors(vecs, id_col, vec_col)
     train = v
     if train_sample is not None:
         train = _train_subset(v, id_col, train_sample, "kmeans").persist()
-
-    # seeding: the k smallest ids OF THE TRAINING SET, cell = dense
-    # order by id (the same distributed partial top-k the expr path
-    # uses, then collected — k rows, never the corpus)
-    seeds = (
-        train.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .sort(id_col)
-        .select("__v")
-        .collect()
-    )
-    cents = [list(r["__v"]) for r in seeds]
-
+    C = _seed_matrix(train, id_col, k)
+    cells = list(range(len(C)))
     id_dt = v.schema[id_col].dataType.simpleString()
-    if id_dt not in ("bigint", "int", "smallint", "tinyint"):
-        raise ValueError(
-            f"kmeans_cells(assign_mode='blas') needs an integral id; "
-            f"{id_col!r} is {id_dt} (use assign_mode='expr')"
-        )
-
-    def make_assign(cells_ids: list[int], C: "np.ndarray"):
-        # C rows are L2-normalized (zero-norm -> cosine NULL semantics:
-        # the expr path's NULL cosine loses every comparison; numpy
-        # mirrors it with -inf so such a centroid never wins, and an
-        # all-invalid row falls back to the first cell with cos NULL ->
-        # emitted as NaN -> cast to None)
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        zero_c = (cn == 0).ravel()
-        cn[cn == 0] = 1.0
-        Cn = C / cn
-        cells_arr = np.array(cells_ids, dtype=np.int64)
-        dim = C.shape[1]
-
-        def assign_batches(it):
-            # mapInArrow: the input column order is (id, __v); vectors
-            # arrive as ONE zero-copy flat float64 buffer (the per-row
-            # list->Python conversion was the measured build wall at
-            # 2M vectors) and the __v column passes through untouched
-            for rb in it:
-                n_rows = rb.num_rows
-                if n_rows == 0:
-                    continue
-                id_arr = rb.column(0)
-                flat = rb.column(1).flatten()
-                # a null or ragged row whose total element count stays
-                # divisible by n_rows would silently misalign EVERY
-                # subsequent row in the batch (r11 advice) — fail
-                # deterministically instead
-                if rb.column(1).null_count or flat.null_count:
-                    raise ValueError(
-                        "kmeans_cells(assign_mode='blas'): null vector "
-                        "rows/elements are not supported"
-                    )
-                if len(flat) != n_rows * dim:
-                    raise ValueError(
-                        f"kmeans_cells(assign_mode='blas'): ragged vector "
-                        f"batch ({len(flat)} elements for {n_rows} rows of "
-                        f"dim {dim})"
-                    )
-                X = flat.to_numpy(zero_copy_only=False).reshape(n_rows, dim)
-                xn = np.linalg.norm(X, axis=1, keepdims=True)
-                zero_x = (xn == 0).ravel()
-                xn[xn == 0] = 1.0
-                cos = (X / xn) @ Cn.T
-                cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-                cos[:, zero_c] = -np.inf
-                cos[zero_x, :] = -np.inf
-                best = np.argmax(cos, axis=1)  # first (min cell) wins ties
-                bc = cos[np.arange(n_rows), best]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        id_arr,
-                        pa.array(
-                            cells_arr[best].astype(np.int32), type=pa.int32()
-                        ),
-                        pa.array(
-                            np.where(np.isfinite(bc), bc, np.nan),
-                            type=pa.float64(),
-                        ),
-                        rb.column(1),
-                    ],
-                    names=[id_col, "cell", "cell_cos", "__v"],
-                )
-
-        return assign_batches
-
     schema = f"{id_col} {id_dt}, cell int, cell_cos double, __v array<double>"
-    a = None
     for rnd in range(iters):
         if rnd > 0:
-            # each round's assignment closes over DRIVER numpy
-            # centroids, so its subtree is always target.mapInArrow —
-            # the centroid collect executes the previous assignment
-            # exactly once and nothing cascades or needs persisting
+            # collecting the centroids executes the previous assignment
+            # exactly once; nothing cascades or needs persisting
             crows = _centroids_of(a, "__v").sort("cell").collect()  # <= k rows
-            cells_ids = [int(r["cell"]) for r in crows]
-            C = np.array([list(r["__cvec"]) for r in crows], dtype=np.float64)
-        else:
-            cells_ids = list(range(len(cents)))
-            C = np.array(cents, dtype=np.float64)
+            cells = [r["cell"] for r in crows]
+            C = np.array([r["__cvec"] for r in crows], dtype=np.float64)
         # training rounds stay on the sample; only the LAST round
         # (whose assignment is the returned value) sees the corpus
         target = train if rnd < iters - 1 else v
-        a = target.select(id_col, "__v").mapInArrow(
-            make_assign(cells_ids, C), schema=schema
-        )
+        a = target.mapInArrow(_cosine_argmax(cells, C), schema=schema)
     if train is not v:
-        # the returned plan closes over driver centroids only — the
-        # training chain is fully executed by the last collect above
         train.unpersist()
     return a.select(
         id_col,
         "cell",
-        # NaN marks the no-valid-cosine fallback row; the expr path
-        # yields SQL NULL there — convert so the two modes agree
-        F.when(F.isnan("cell_cos"), F.lit(None)).otherwise(
-            F.col("cell_cos")
+        # NaN marks the no-valid-cosine fallback row -> SQL NULL
+        F.round(
+            F.when(F.isnan("cell_cos"), F.lit(None)).otherwise(F.col("cell_cos")), 6
         ).alias("cell_cos"),
     )
 
@@ -377,12 +253,12 @@ def semdedup(
     Scale: the cell self-join is an equi-join on the cell id (a
     shuffle, no all-pairs product); at real scale k grows with the
     corpus (k ~ n / target_occupancy) so per-cell work stays flat,
-    which is exactly the published algorithm's design point. Both
-    sides of the self-join consume the same quantizer subtree;
-    `persist_assignment=True` caches it so it executes once (the
-    production shape — tools/stress_ann.py measures it), while the
-    default stays fully lazy for the plan-build-runs-zero-jobs
-    oracle gate.
+    which is exactly the published algorithm's design point. The
+    quantizer trains eagerly (kmeans_cells' bounded centroid
+    collects); both sides of the self-join then consume its final
+    assignment pass, and `persist_assignment=True` caches that pass
+    so it executes once (the production shape — tools/stress_ann.py
+    measures it).
 
     `persisted_out`: when persisting, the cached assignment DataFrame
     is appended here so long-lived callers (sweep loops like
@@ -391,7 +267,7 @@ def semdedup(
     ContextCleaner GC'ing the unreferenced RDD.
     """
     a = kmeans_cells(vecs, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-    v = vecs.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("__v"))
+    v = _vectors(vecs, id_col, vec_col)
     av = a.join(v, id_col).select(id_col, "cell", "__v")
     if persist_assignment:
         av = av.persist()
@@ -444,20 +320,6 @@ def semdedup(
     )
 
 
-def _seed_subspace(j: int, dsub: int):
-    """Seed codebook for subspace j: slice each collected seed vector
-    (a separate factory so the 2-arg transform lambda closes over j
-    without growing its signature — pyspark derives the lambda's SQL
-    arity from the Python signature)."""
-    return F.transform(
-        "__s",
-        lambda s, i: F.struct(
-            i.alias("cell"),
-            F.slice(s["__sv"], j * dsub + 1, dsub).alias("__cvec"),
-        ),
-    )
-
-
 def _l2sq(a, b):
     """Squared Euclidean distance between two equal-length arrays —
     a fold in array order, so both engines accumulate identically."""
@@ -466,6 +328,64 @@ def _l2sq(a, b):
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def _l2_argmin(codebook: list, dim: int, final: bool):
+    """mapInArrow kernel for one PQ assignment over (id, __v) batches.
+    codebook[j] = (cell ids ascending, C_j (k_j x dsub)); per subspace
+    the code is the argmin of the 6dp-rounded squared L2 (first, i.e.
+    min cell, wins ties), via the expanded ||x||^2 - 2xC + ||C||^2 —
+    fp error ~1e-12 vs the oracle's fold order, far inside the 5e-7
+    boundary epsilon the canary certifies. Training rounds emit
+    (id, codes, __v); the final round emits (id, pq_code, __v,
+    __recon) with the concatenated chosen sub-centroids."""
+    m = len(codebook)
+    dsub = dim // m
+    cb = [
+        (np.asarray(cells, dtype=np.int32), np.asarray(C, dtype=np.float64))
+        for cells, C in codebook
+    ]
+
+    def assign(batches):
+        for rb in batches:
+            n_rows = rb.num_rows
+            if n_rows == 0:
+                continue
+            X = _batch_matrix(rb.column(1), dim, "_pq_reconstruct")
+            codes = np.empty((n_rows, m), dtype=np.int32)
+            recon = np.empty_like(X)
+            for j, (cells, C) in enumerate(cb):
+                Xj = X[:, j * dsub:(j + 1) * dsub]
+                d2 = (
+                    (Xj * Xj).sum(axis=1, keepdims=True)
+                    - 2.0 * (Xj @ C.T)
+                    + (C * C).sum(axis=1)[None, :]
+                )
+                best = np.argmin(_half_up6(d2), axis=1)
+                codes[:, j] = cells[best]
+                recon[:, j * dsub:(j + 1) * dsub] = C[best]
+            id_name = rb.schema.names[0]
+            if not final:
+                codes_arr = pa.ListArray.from_arrays(
+                    pa.array(np.arange(0, (n_rows + 1) * m, m, dtype=np.int32)),
+                    pa.array(codes.ravel()),
+                )
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0), codes_arr, rb.column(1)],
+                    names=[id_name, "codes", "__v"],
+                )
+                continue
+            recon_arr = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n_rows + 1) * dim, dim, dtype=np.int32)),
+                pa.array(recon.ravel()),
+            )
+            code_str = pa.array(["-".join(map(str, row)) for row in codes], type=pa.string())
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), code_str, rb.column(1), recon_arr],
+                names=[id_name, "pq_code", "__v", "__recon"],
+            )
+
+    return assign
 
 
 def _pq_reconstruct(
@@ -477,7 +397,6 @@ def _pq_reconstruct(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    assign_mode: str = "expr",
     train_sample: int | None = None,
 ) -> DataFrame:
     """Product quantization (Jégou, Douze, Schmid, TPAMI 2011 — the
@@ -491,260 +410,38 @@ def _pq_reconstruct(
     compression), and the reconstruction (concatenated chosen
     sub-centroids) is audited against the original.
 
-    Output: (vec_id, pq_code 'c0-c1-...-c{m-1}', pq_l2_err,
-    pq_recon_cos).
+    Output: (vec_id, pq_code 'c0-c1-...-c{m-1}', __v, __recon).
 
-    Scale shape: ASSIGNMENT is pure expressions over ONE broadcast
-    codebook row (all m*k sub-centroids — k*dim doubles, tiny), so a
-    Lloyd round adds zero corpus shuffle, exactly like kmeans_cells;
-    the recompute explodes corpus rows to (j, cell, pos) element
-    grain — the same one-shuffle elementwise mean as _centroids_of,
-    m subspaces sharing a single aggregation. At 100 TB you would
-    train the codebook on a sample and only run the (shuffle-free)
-    assignment over the corpus — `assign_mode="blas"` with
-    `train_sample` IS that split (r12 verdict #5): the Lloyd training
-    rounds run on the md5-pinned sample via a numpy driver loop
-    (identical schedule/seeding/6dp argmin/tie-break; centroid
-    recompute stays the SAME Spark aggregation so codebook doubles
-    are bit-identical), and one mapInArrow pass codes the full
-    corpus. With train_sample=None (or >= corpus) the blas mode is
-    value-identical to the expr plan — parity-tested.
-    """
+    Shape: the same eager driver loop as kmeans_cells. Each round's
+    assignment is one mapInArrow pass (`_l2_argmin`); the codebook
+    recompute explodes the assigned rows to (j, cell, sub-vector)
+    grain — the one-shuffle elementwise mean of _centroids_of, m
+    subspaces sharing a single aggregation — and collects <= m*k
+    sub-centroids (k*dim doubles, never the corpus). `train_sample`
+    is the classic sampled split: the Lloyd training rounds run on
+    the md5-pinned sample and only the final coding pass scans the
+    corpus; with train_sample=None (or >= corpus) the schedule is
+    the unsampled one."""
     dsub = dim // m
     if dsub * m != dim:
         raise ValueError(f"m={m} must divide dim={dim}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    if train_sample is not None and assign_mode != "blas":
-        raise ValueError("train_sample requires assign_mode='blas'")
-    if assign_mode == "blas":
-        return _pq_reconstruct_blas(
-            vecs, m, k, iters, id_col=id_col, vec_col=vec_col, dim=dim,
-            train_sample=train_sample,
-        )
-    if assign_mode != "expr":
-        raise ValueError(f"assign_mode must be 'expr' or 'blas', got {assign_mode!r}")
-    v = vecs.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("__v"))
-
-    # seeds: the k smallest ids (distributed partial top-k), each
-    # sliced into its m sub-vectors -> ONE row holding the codebook
-    # as array[j] of array[struct(cell, __cvec)]
-    seed_row = (
-        v.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("__sid"), F.col("__v").alias("__sv"))
-                )
-            ).alias("__s")
-        )
-        .select(F.array(*[_seed_subspace(j, dsub) for j in range(m)]).alias("__cb"))
-    )
-
-    def assign(cb_row: DataFrame) -> DataFrame:
-        # per subspace: argmin L2 over the broadcast codebook as
-        # max(struct(round(-d2, 6), -cell)) — min distance, then min
-        # cell, matching the oracle's ORDER BY round(d2,6), cell
-        def best_for(j: int):
-            sub = F.slice("__v", j * dsub + 1, dsub)
-            scored = F.transform(
-                F.element_at("__cb", j + 1),
-                lambda c: F.struct(
-                    F.round(-_l2sq(sub, c["__cvec"]), 6).alias("negd"),
-                    (-c["cell"]).alias("negcell"),
-                ),
-            )
-            best = F.array_max(scored)
-            return F.struct(
-                F.lit(j).alias("j"), (-best["negcell"]).alias("cell")
-            )
-
-        return v.crossJoin(F.broadcast(cb_row)).select(
-            id_col,
-            "__v",
-            "__cb",
-            F.array(*[best_for(j) for j in range(m)]).alias("__code"),
-        )
-
-    def recompute(a: DataFrame) -> DataFrame:
-        sliced = a.select("__v", F.explode("__code").alias("c")).select(
-            F.col("c.j").alias("j"),
-            F.col("c.cell").alias("cell"),
-            F.slice("__v", F.col("c.j") * dsub + 1, F.lit(dsub)).alias("__sv"),
-        )
-        cents = _centroids_of(sliced, "__sv", keys=("j", "cell"))
-        return (
-            cents.groupBy("j")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("cell", "__cvec"))).alias(
-                    "__percell"
-                )
-            )
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("j", "__percell"))
-                ).alias("__jc")
-            )
-            .select(F.transform("__jc", lambda s: s["__percell"]).alias("__cb"))
-        )
-
-    a = assign(seed_row)
-    for _ in range(iters - 1):
-        a = assign(recompute(a))
-
-    recon = F.flatten(
-        F.transform(
-            "__code",
-            lambda c: F.element_at(
-                F.filter(F.get("__cb", c["j"]), lambda s: s["cell"] == c["cell"]), 1
-            )["__cvec"],
-        )
-    )
-    return a.select(
-        id_col,
-        F.array_join(
-            F.transform("__code", lambda c: c["cell"].cast("string")), "-"
-        ).alias("pq_code"),
-        "__v",
-        recon.alias("__recon"),
-    )
-
-
-def _pq_reconstruct_blas(
-    vecs: DataFrame,
-    m: int,
-    k: int,
-    iters: int,
-    *,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    train_sample: int | None = None,
-) -> DataFrame:
-    """The BLAS/sampled PQ loop behind _pq_reconstruct(assign_mode=
-    "blas") — r12 verdict #5. Identical schedule to the expr plan:
-    seeds are the k smallest ids (of the training set), each round
-    argmins the 6dp HALF-UP-rounded squared L2 per subspace with
-    min-cell tie-break, empty cells shrink, and the codebook
-    recompute is the SAME Spark aggregation (_centroids_of over the
-    exploded (j, cell, sub-vector) grain), so codebook doubles are
-    bit-identical to the expr path's. Only the per-row argmin moves
-    to numpy (expanded ||x||^2 - 2xC + ||C||^2 — fp error ~1e-12 vs
-    the fold order, far inside the 5e-7 boundary epsilon the canary
-    certifies, the same argument as _adc_shortlist_blas). Training
-    rounds touch ONLY the md5-pinned sample; the final coding pass is
-    the corpus's single Arrow scan. Codebook transfer is k*dim
-    doubles per round — bounded, never corpus-sized."""
-    import numpy as np
-    import pyarrow as pa
-
-    dsub = dim // m
-    v = vecs.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("__v"))
-    id_dt = v.schema[id_col].dataType.simpleString()
-    if id_dt not in ("bigint", "int", "smallint", "tinyint"):
-        raise ValueError(
-            f"_pq_reconstruct(assign_mode='blas') needs an integral id; "
-            f"{id_col!r} is {id_dt} (use assign_mode='expr')"
-        )
-
+    v = _vectors(vecs, id_col, vec_col)
     train = v
     if train_sample is not None:
         train = _train_subset(v, id_col, train_sample, "pq").persist()
-
-    seeds = (
-        train.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .sort(id_col)
-        .select("__v")
-        .collect()
-    )
-    seed_mat = np.array([list(r["__v"]) for r in seeds], dtype=np.float64)
-
-    def make_assign(cb: list, final: bool):
-        # cb[j] = (cells_ids ascending, C (k_j x dsub)); distances in
-        # integer micro-units: floor(d2*1e6 + 0.5) == the expr path's
-        # round(-d2, 6) argmax (HALF_UP, d2 >= 0), first-wins argmin
-        # over ascending cells == the min-cell tie-break
-        cb_np = [
-            (np.array(cells_ids, dtype=np.int64), np.asarray(C, dtype=np.float64))
-            for cells_ids, C in cb
-        ]
-
-        def batches(it):
-            for rb in it:
-                n_rows = rb.num_rows
-                if n_rows == 0:
-                    continue
-                id_arr = rb.column(0)
-                flat = rb.column(1).flatten()
-                if rb.column(1).null_count or flat.null_count:
-                    raise ValueError(
-                        "_pq_reconstruct(assign_mode='blas'): null vector "
-                        "rows/elements are not supported"
-                    )
-                if len(flat) != n_rows * dim:
-                    raise ValueError(
-                        f"_pq_reconstruct(assign_mode='blas'): ragged "
-                        f"vector batch ({len(flat)} elements for {n_rows} "
-                        f"rows of dim {dim})"
-                    )
-                X = flat.to_numpy(zero_copy_only=False).reshape(n_rows, dim)
-                codes = np.empty((n_rows, m), dtype=np.int32)
-                recon = np.empty_like(X) if final else None
-                for j, (cells_ids, C) in enumerate(cb_np):
-                    Xj = X[:, j * dsub:(j + 1) * dsub]
-                    d2 = (
-                        (Xj * Xj).sum(axis=1, keepdims=True)
-                        - 2.0 * (Xj @ C.T)
-                        + (C * C).sum(axis=1)[None, :]
-                    )
-                    d2u = np.floor(d2 * 1e6 + 0.5)  # HALF_UP micro-units
-                    best = np.argmin(d2u, axis=1)  # first (min cell) wins
-                    codes[:, j] = cells_ids[best].astype(np.int32)
-                    if final:
-                        recon[:, j * dsub:(j + 1) * dsub] = C[best]
-                if final:
-                    code_str = pa.array(
-                        ["-".join(map(str, row)) for row in codes],
-                        type=pa.string(),
-                    )
-                    off = pa.array(
-                        np.arange(0, (n_rows + 1) * dim, dim, dtype=np.int32)
-                    )
-                    recon_arr = pa.ListArray.from_arrays(
-                        off, pa.array(recon.ravel(), type=pa.float64())
-                    )
-                    yield pa.RecordBatch.from_arrays(
-                        [id_arr, code_str, rb.column(1), recon_arr],
-                        names=[id_col, "pq_code", "__v", "__recon"],
-                    )
-                else:
-                    off = pa.array(
-                        np.arange(0, (n_rows + 1) * m, m, dtype=np.int32)
-                    )
-                    codes_arr = pa.ListArray.from_arrays(
-                        off, pa.array(codes.ravel(), type=pa.int32())
-                    )
-                    yield pa.RecordBatch.from_arrays(
-                        [id_arr, codes_arr, rb.column(1)],
-                        names=[id_col, "codes", "__v"],
-                    )
-
-        return batches
-
+    seeds = _seed_matrix(train, id_col, k)
+    codebook = [
+        (list(range(len(seeds))), seeds[:, j * dsub:(j + 1) * dsub]) for j in range(m)
+    ]
+    id_dt = v.schema[id_col].dataType.simpleString()
     train_schema = f"{id_col} {id_dt}, codes array<int>, __v array<double>"
     final_schema = (
-        f"{id_col} {id_dt}, pq_code string, __v array<double>, "
-        f"__recon array<double>"
+        f"{id_col} {id_dt}, pq_code string, __v array<double>, __recon array<double>"
     )
-    cb = None
-    a = None
     for rnd in range(iters):
         if rnd > 0:
-            # recompute with the SAME Spark aggregation as the expr
-            # path: explode to (j, cell, sub-vector) grain, one
-            # shuffle, m subspaces sharing it; collect <= m*k rows
             sliced = a.select(
                 "__v", F.posexplode("codes").alias("j", "cell")
             ).select(
@@ -756,30 +453,20 @@ def _pq_reconstruct_blas(
                 _centroids_of(sliced, "__sv", keys=("j", "cell"))
                 .sort("j", "cell")
                 .collect()
-            )
-            percell: dict[int, list] = {}
-            for r in crows:
-                percell.setdefault(int(r["j"]), []).append(
-                    (int(r["cell"]), list(r["__cvec"]))
-                )
-            cb = [
+            )  # <= m*k rows
+            codebook = [
                 (
-                    [c for c, _ in percell.get(j, [])],
+                    [r["cell"] for r in crows if r["j"] == j],
                     np.array(
-                        [vec for _, vec in percell.get(j, [])], dtype=np.float64
+                        [r["__cvec"] for r in crows if r["j"] == j], dtype=np.float64
                     ).reshape(-1, dsub),
                 )
                 for j in range(m)
             ]
-        else:
-            cb = [
-                (list(range(len(seeds))), seed_mat[:, j * dsub:(j + 1) * dsub])
-                for j in range(m)
-            ]
         final = rnd == iters - 1
-        target = v if final else train
-        a = target.select(id_col, "__v").mapInArrow(
-            make_assign(cb, final), schema=final_schema if final else train_schema
+        a = (v if final else train).mapInArrow(
+            _l2_argmin(codebook, dim, final),
+            schema=final_schema if final else train_schema,
         )
     if train is not v:
         train.unpersist()
@@ -986,16 +673,16 @@ def ivf_pq_rerank_topk(
     of the sweep (85 s sampled at 2M). The registered members pin the
     small-corpus (m=8, k_cells=16) dial instead — density at 500
     vectors doesn't need 96-bit codes, and the oracle replays that
-    dial bit-for-bit. Scale shape: every stage is a broadcast or
-    an equi-join on the cell id — queries broadcast, centroids and
-    codebooks are one tiny row each, and the only corpus-sized
-    shuffles are the quantizer/codebook re-aggs; the ADC scan touches
-    ~n_probe/k_coarse of the codes, never the corpus product.
+    dial bit-for-bit. Scale shape: every stage is an Arrow pass, a
+    broadcast or an equi-join on the cell id — queries broadcast,
+    centroids and codebooks reach the driver as bounded collects, and
+    the only corpus-sized shuffles are the quantizer/codebook
+    re-aggs; the ADC scan touches ~n_probe/k_coarse of the codes,
+    never the corpus product.
 
     `persisted_out`: the coarse assignment is persist()ed (it feeds
     both the inverted lists and the probe centroids — unpersisted,
-    each action would run the Lloyd subtree twice, and the two
-    executions' float avg() orders could even disagree). Pass a list
+    each action would run the final assignment pass twice). Pass a list
     to receive the cached handle for explicit unpersist() in sweep
     loops (the semdedup idiom); identical plans share one cache
     entry, so repeated calls per corpus do not accumulate.
@@ -1025,29 +712,24 @@ def ivf_pq_build(
     dim: int = 64,
     residual: bool = False,
     persisted_out: list | None = None,
-    coarse_assign: str = "expr",
-    pq_assign: str = "expr",
+    coarse_assign: str = "blas",
+    pq_assign: str = "blas",
     train_sample: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The BUILD half of ivf_pq_rerank_topk: (index, coarse centroids).
 
-    `coarse_assign="blas"` routes the coarse quantizer through
-    kmeans_cells(assign_mode="blas") — value-identical cells at numpy
-    assignment cost, the dial for production k_coarse ~ sqrt(n) builds
-    (r11 verdict #3; the k=447 expr build cost 507 s where assignment
-    is O(n*k*dim) expression evaluation per round). Default stays
-    "expr" so registered members keep lazy plans.
+    Both quantizers run the module's eager Lloyd loop (kmeans_cells,
+    then _pq_reconstruct). `train_sample` trains BOTH on the
+    md5-pinned n-row sample while every corpus-sized pass stays a
+    single assignment scan — the classic sampled-training split
+    (Jégou et al. train on ~100k-1M points). The post-hoc probe
+    centroids and the residuals are ALWAYS computed over the full
+    corpus membership, so the probe sees the same centroid definition
+    regardless of sampling.
 
-    `pq_assign="blas"` does the same for the PQ codebook half
-    (_pq_reconstruct_blas — the r11 2M build's dominant wall was the
-    O(n*m*k_cells*dsub) expression argmin per training round), and
-    `train_sample` (requires both assigns "blas") trains BOTH
-    quantizers on the md5-pinned n-row sample while every
-    corpus-sized pass stays a single assignment scan — the classic
-    sampled-training split (Jégou et al. train on ~100k-1M points).
-    The post-hoc probe centroids and the residuals are ALWAYS
-    computed over the full corpus membership, so the probe sees the
-    same centroid definition regardless of sampling.
+    `coarse_assign` / `pq_assign` accept only "blas" (the one
+    assignment kernel); they remain solely because the frozen
+    benchmark harness passes them, and go with its next revision.
 
     The index carries (neighbor_id, cell, __recon) — the compressed
     representation only, never the raw vectors (the probe joins raw
@@ -1055,13 +737,10 @@ def ivf_pq_build(
     carrying them here would double the index footprint for rows the
     re-rank never touches). The coarse assignment is persist()ed: it
     feeds BOTH the inverted lists and the probe centroids, and
-    unpersisted each action would execute the Lloyd subtree twice —
-    double cost, and the two executions' avg() float accumulation
-    orders could disagree, leaving the probe centroids inconsistent
-    with the inverted lists. `persisted_out` receives the cached
-    handle for explicit unpersist() in sweep loops (the semdedup
-    idiom); persist() is lazy and identical plans share one cache
-    entry per corpus.
+    unpersisted each action would execute the final assignment pass
+    twice. `persisted_out` receives the cached handle for explicit
+    unpersist() in sweep loops (the semdedup idiom); persist() is
+    lazy and identical plans share one cache entry per corpus.
 
     `residual=True` is the actual IVFADC form (Jégou et al., TPAMI
     2011 §V): PQ trains on and codes the RESIDUAL v − centroid[cell(v)]
@@ -1082,16 +761,15 @@ def ivf_pq_build(
     An ANN index amortizes its build over many query batches —
     persist both returned frames too and reuse them across
     ivf_pq_probe calls (the stress harness measures the split)."""
-    if train_sample is not None and (
-        coarse_assign != "blas" or pq_assign != "blas"
-    ):
+    if coarse_assign != "blas" or pq_assign != "blas":
         raise ValueError(
-            "train_sample requires coarse_assign='blas' and pq_assign='blas'"
+            "coarse_assign and pq_assign accept only 'blas', got "
+            f"{coarse_assign!r} / {pq_assign!r}"
         )
     cells = (
         kmeans_cells(
             vecs, k=k_coarse, iters=iters, id_col=id_col, vec_col=vec_col,
-            assign_mode=coarse_assign, train_sample=train_sample,
+            train_sample=train_sample,
         )
         .select(id_col, "cell")
         .persist()
@@ -1128,7 +806,7 @@ def ivf_pq_build(
             persisted_out.append(rv)
         coded = _pq_reconstruct(
             rv, m, k_cells, iters, id_col=id_col, vec_col="__res", dim=dim,
-            assign_mode=pq_assign, train_sample=train_sample,
+            train_sample=train_sample,
         )
         corpus = (
             coded.select(id_col, "__recon")
@@ -1145,7 +823,7 @@ def ivf_pq_build(
         return corpus, cents
     coded = _pq_reconstruct(
         vecs, m, k_cells, iters, id_col=id_col, vec_col=vec_col, dim=dim,
-        assign_mode=pq_assign, train_sample=train_sample,
+        train_sample=train_sample,
     )
     corpus = coded.join(cells, id_col).select(
         F.col(id_col).alias("neighbor_id"), "cell", "__recon"
@@ -1166,7 +844,6 @@ def ivf_pq_probe(
     vec_col: str = "embedding",
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
-    blas: bool = True,
 ) -> DataFrame:
     """The PROBE half of ivf_pq_rerank_topk over a (possibly
     persisted) build: coarse probe -> ADC over probed cells ->
@@ -1179,61 +856,24 @@ def ivf_pq_probe(
     avg() aggregates whose accumulation order the engines don't fix,
     so unrounded near-ties could probe different cells per engine.
 
-    `blas=True` (default, r11 verdict #2): the ADC stage runs as ONE
-    mapInPandas BLAS pass over the probed cells' codes instead of a
-    per-(query, candidate) join + fold expression — at 200k vectors
-    the join machinery ate the 8x row reduction and left the probe at
-    parity with brute force (STRESS_r10). The probe-CELL selection
-    stays the bit-identical Spark expression above; its (q_id, cell,
-    qvec) result — O(queries * n_probe) rows, bounded by construction
-    like the brute_force_topk_matmul query collect — is collected
-    into the closure, the index is filtered to the probed-cell union
-    (a pushed-down `isin`, partition-prunable at scale), and each
-    Arrow batch computes ||r||^2 - 2 r.q + ||q||^2 against the cell's
-    query matrix, half-up-rounds to 6dp (the F.round discipline), and
-    emits only its LOCAL top-`candidates` per query under the exact
-    global order (adc ASC, neighbor_id ASC) — so the global window
-    cut sees batches*queries*candidates rows, never the probed slice,
-    and global top-candidates ⊆ union of local tops holds exactly.
-    Requires integral ids (the Arrow path packs int64); non-integral
-    ids fall back to the expression form, same semantics.
-
-    LAZINESS CAVEAT (r11 advice): blas=True makes DataFrame
-    CONSTRUCTION run Spark jobs eagerly (the bounded probe-assignment
-    collect plus schema probes) and freezes the probed-cell set into
-    the closure at call time — callers that need a fully lazy plan
-    (e.g. the plan-construction-is-job-free gate) must pass
-    blas=False; the registered members document the default's eager
-    jobs and the plan-audit allowlist carries them."""
+    The ADC stage is ONE mapInArrow pass over the probed cells' codes
+    (`_adc_shortlist`): the probe-cell selection's (q_id, cell, qvec)
+    result — O(queries * n_probe) rows, bounded by construction like
+    the brute_force_topk_matmul query collect — is collected into the
+    closure, so building the frame runs that job eagerly and freezes
+    the probed-cell set at call time. Ids are packed into int64, so
+    both id columns must be integral."""
+    for df_, c_ in ((queries, q_id_col), (vecs, id_col)):
+        dt = df_.schema[c_].dataType.simpleString()
+        if dt not in ("bigint", "int", "smallint", "tinyint"):
+            raise ValueError(f"ivf_pq_probe needs integral ids; {c_!r} is {dt}")
     q = queries.select(
         F.col(q_id_col).alias("q_id"),
         as_double_array(F.col(q_vec_col)).alias("__qv"),
     )
-    probes = probe_cells(cents, q, n_probe)
-    integral_ids = all(
-        df_.schema[c_].dataType.simpleString()
-        in ("bigint", "int", "smallint", "tinyint")
-        for df_, c_ in ((queries, q_id_col), (vecs, id_col))
-    )
-    if blas and integral_ids:
-        shortlist = _adc_shortlist_blas(corpus, probes, candidates)
-    else:
-        cand = corpus.join(F.broadcast(probes), "cell").filter(
-            F.col("neighbor_id") != F.col("q_id")
-        )
-        adc = cand.select(
-            "q_id",
-            "neighbor_id",
-            F.round(_l2sq(F.col("__qv"), F.col("__recon")), 6).alias("__adc"),
-        )
-        w_short = Window.partitionBy("q_id").orderBy(
-            F.col("__adc").asc(), F.col("neighbor_id").asc()
-        )
-        shortlist = adc.withColumn(
-            "__sr", F.row_number().over(w_short)
-        ).filter(F.col("__sr") <= candidates).drop("__sr")
-    # re-rank joins the query vectors back by q_id (the BLAS shortlist
-    # does not carry __qv through the Arrow pass)
+    shortlist = _adc_shortlist(corpus, probe_cells(cents, q, n_probe), candidates)
+    # re-rank joins the query vectors back by q_id (the Arrow
+    # shortlist does not carry __qv through the pass)
     shortlist = shortlist.select("q_id", "neighbor_id").join(
         F.broadcast(q), "q_id"
     )
@@ -1277,31 +917,26 @@ def probe_cells(cents: DataFrame, q: DataFrame, n_probe: int) -> DataFrame:
     )
 
 
-def _adc_shortlist_blas(
+def _adc_shortlist(
     corpus: DataFrame, probes: DataFrame, candidates: int
 ) -> DataFrame:
-    """BLAS ADC: one Arrow pass over the probed cells' codes.
+    """ADC shortlist: one Arrow pass over the probed cells' codes.
     Collects the probe assignment (O(queries * n_probe) rows — the
     bounded query-side collect of the brute_force_topk_matmul shape,
-    never the corpus), builds a per-cell query matrix, and scores each
-    Arrow batch with one matrix multiply per cell present. Rounding is
-    half-up at 6dp (floor(x * 1e6 + 0.5) — ADC distances are >= 0, so
-    this matches F.round's HALF_UP for the non-boundary values the
-    canary certifies). Each batch emits its local top-`candidates` per
-    query under (adc ASC, neighbor_id ASC) — boundary TIES at the
-    local threshold are resolved by the same total order the global
-    cut uses, so the union-of-local-tops property is exact, not
-    approximate. Self-matches (neighbor == query id) are masked before
-    the cut, mirroring the expression path's pre-shortlist filter.
-
-    Arrow-native (r11): the pass runs via mapInArrow with the recon
-    vectors read as ONE zero-copy flat float64 buffer per batch — the
-    per-row list->Python conversion of the earlier mapInPandas form
-    was the measured probe wall at 2M vectors (the ADC matmul itself
-    is trivial)."""
-    import numpy as np
-    import pyarrow as pa
-
+    never the corpus), builds a per-cell query matrix, filters the
+    index to the probed-cell union (a pushed-down `isin`,
+    partition-prunable at scale), and scores each Arrow batch with one
+    matrix multiply per cell present: ||r||^2 - 2 r.q + ||q||^2,
+    rounded half-up at 6dp. Each batch emits its local
+    top-`candidates` per query under (adc ASC, neighbor_id ASC) —
+    boundary TIES at the local threshold are resolved by the same
+    total order the global cut uses, so the union-of-local-tops
+    property is exact, not approximate, and the global window sees
+    batches*queries*candidates rows, never the probed slice.
+    Self-matches (neighbor == query id) are masked before the cut.
+    The recon vectors are read as ONE zero-copy flat float64 buffer
+    per batch — the per-row list->Python conversion of a pandas form
+    was the measured probe wall at 2M vectors."""
     prows = probes.collect()
     per_cell: dict[int, tuple] = {}
     for r in prows:
@@ -1325,25 +960,7 @@ def _adc_shortlist_blas(
                 continue
             cells_all = rb.column(0).to_numpy(zero_copy_only=False)
             ids_all = rb.column(1).to_numpy(zero_copy_only=False)
-            # one flat float64 buffer for the whole batch's vectors —
-            # flatten() honors slice offsets; a null or ragged recon
-            # row would silently misalign every subsequent row of the
-            # batch (r11 advice), so verify shape before reshaping
-            flat = rb.column(2).flatten()
-            if rb.column(2).null_count or flat.null_count:
-                raise ValueError(
-                    "ivf_pq_probe(blas=True): null reconstruction "
-                    "rows/elements are not supported"
-                )
-            if recon_dim is None or len(flat) != n_rows * recon_dim:
-                raise ValueError(
-                    f"ivf_pq_probe(blas=True): ragged reconstruction "
-                    f"batch ({len(flat)} elements for {n_rows} rows of "
-                    f"dim {recon_dim})"
-                )
-            R_all = flat.to_numpy(zero_copy_only=False).reshape(
-                n_rows, recon_dim
-            )
+            R_all = _batch_matrix(rb.column(2), recon_dim, "ivf_pq_probe")
             out_q, out_n, out_d = [], [], []
             for cell in np.unique(cells_all):
                 qids, Q = per_cell[int(cell)]
@@ -1353,12 +970,11 @@ def _adc_shortlist_blas(
                 # ||r - q||^2 expanded; fp error vs the fold order is
                 # ~1e-12, far inside the 5e-7 boundary epsilon the
                 # canary certifies is clear
-                d = (
+                d = _half_up6(
                     (R * R).sum(axis=1, keepdims=True)
                     - 2.0 * (R @ Q.T)
                     + (Q * Q).sum(axis=1)[None, :]
                 )
-                d = np.floor(d * 1e6 + 0.5) / 1e6  # HALF_UP, d >= 0
                 d[ids[:, None] == qids[None, :]] = np.inf  # self-match
                 n = len(ids)
                 cn = min(candidates, n)

@@ -2424,6 +2424,21 @@ def _fused_doc_text_ints(batches):
         )
 
 
+# columns the fused tail appends with select("*", …) — corpus_prep_fused's
+# decontamination stage and the packing select (plus every pack_*)
+_FUSED_TAIL_COLS = ("__cum", "n_shared_grams", "is_contaminated")
+
+
+def _reject_fused_reserved(cols: list[str], reserved: tuple, what: str) -> None:
+    clash = next((c for c in cols if c in reserved or c.startswith("pack_")), None)
+    if clash is not None:
+        raise ValueError(
+            f"doc_features_fused: {what} stages column {clash!r}, a name "
+            "reserved for the fused tail (__cum, n_shared_grams, "
+            "is_contaminated, pack_*)"
+        )
+
+
 def doc_features_fused(
     docs: DataFrame,
     extra_cols: list | None = None,
@@ -2453,6 +2468,10 @@ def doc_features_fused(
     (e.g. gram arrays) can be consumed and dropped without ever
     crossing the Exchange — both exist for corpus_prep_fused, which
     extends this scan with the decontamination and exact-dup signals.
+    The fused tail appends `__cum`, `n_shared_grams`, `is_contaminated`
+    and `pack_*` with select("*", …), so those names are reserved: a
+    caller-staged column of the same name raises ValueError rather
+    than coming out duplicated.
     """
     from pyspark.sql import Window
 
@@ -2567,8 +2586,10 @@ def doc_features_fused(
         SEM.round6_ratio("top_token_count", "rep_n_tokens").alias("top_token_frac"),
         SEM.round6_ratio("__rep_nd", "rep_n_tokens").alias("distinct_frac"),
     ).drop(*CLF_STAGE_NAMES, *TX.TEXT_STAGE_NAMES, "__rep_nd")
+    _reject_fused_reserved(one.columns, _FUSED_TAIL_COLS, "extra_cols")
     if pre_window is not None:
         one = pre_window(one)
+        _reject_fused_reserved(one.columns, ("__cum",), "pre_window")
     W_CTX = 2048
     w = (
         Window.partitionBy("lang")

@@ -315,26 +315,28 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _coarse_probe_ctes(src: str, n_probe: int = 2) -> str:
+def _coarse_probe_ctes(
+    src: str, n_probe: int = 2, *, dim: int = EMB_DIM, every: int = 50
+) -> str:
     """Shared coarse-quantizer probe CTE block (a, ex2, comp2, cent2,
     q, probes) over a `cells` CTE and a `src` CTE exposing
-    (vec_id, v): per-cell mean centroids, the mod-50 query carve-out,
-    and the n_probe nearest-centroid pick. The probe-ranking cosine
-    is ROUNDED to 6dp with ascending-cell tie-break, mirroring the
+    (vec_id, v): per-cell mean centroids, the mod-`every` query
+    carve-out, and the n_probe nearest-centroid pick. The probe-ranking
+    cosine is ROUNDED to 6dp with ascending-cell tie-break, mirroring the
     Spark probes (operators/topk.ivf_topk, operators/kmeans.
     ivf_pq_probe): centroids are float avg() aggregates whose
     accumulation order the engines don't fix, so an unrounded
     near-tie could probe different cells per engine. ONE definition
     so the two composed oracles (_ivf_kmeans_oracle_sql,
-    _ivfpq_oracle_sql) cannot drift."""
+    _ivf_pq_oracle_sql) cannot drift."""
     return f"""a AS (SELECT e.vec_id, c.cell, e.v
           FROM {src} e JOIN cells c ON c.vec_id = e.vec_id),
     ex2 AS (SELECT cell, r.i AS i, v[r.i] AS x
-            FROM a, LATERAL unnest(range(1, 65)) AS r(i)),
+            FROM a, LATERAL unnest(range(1, {dim + 1})) AS r(i)),
     comp2 AS (SELECT cell, i, avg(x) AS m FROM ex2 GROUP BY cell, i),
     cent2 AS (SELECT cell, list(m ORDER BY i) AS centroid
               FROM comp2 GROUP BY cell),
-    q AS (SELECT vec_id AS q_id, v AS qv FROM {src} WHERE vec_id % 50 = 0),
+    q AS (SELECT vec_id AS q_id, v AS qv FROM {src} WHERE vec_id % {every} = 0),
     probes AS (
       SELECT q_id, qv, cell FROM (
         SELECT q.q_id, q.qv, c.cell,
@@ -344,60 +346,6 @@ def _coarse_probe_ctes(src: str, n_probe: int = 2) -> str:
         FROM q CROSS JOIN cent2 c)
       WHERE pr <= {n_probe}
     )"""
-
-
-def _ivf_kmeans_oracle_sql() -> str:
-    """IVF probe logic over the GEOMETRIC k-means cells instead of the
-    label column: the quantizer CTE is the embedding_kmeans_cells
-    member oracle verbatim (same schedule, seeding, quantized argmax),
-    so the composed path is value-checked end to end."""
-    from .registry import member_oracle
-
-    return f"""
-    WITH cells AS ({member_oracle("embedding_kmeans_cells")}),
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    {_coarse_probe_ctes("e")},
-    scored AS (
-      SELECT p.q_id, a.vec_id AS neighbor_id,
-             list_cosine_similarity(a.v, p.qv) AS cos
-      FROM a JOIN probes p ON a.cell = p.cell
-      WHERE a.vec_id <> p.q_id
-    )
-    SELECT q_id, neighbor_id, round(cos, 6) AS cos, CAST(rank AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-          FROM scored)
-    WHERE rank <= 5
-    """
-
-
-def _register_ivf_kmeans_topk() -> None:
-    """The PRODUCTION ANN composition (round 6): IVF inverted lists
-    over the GEOMETRIC k-means quantizer — the pairing SCALE.md
-    measured taking IVF recall from 0.0 (random label cells) to 1.0
-    on the 20k replica corpus, now registered and driver-checked.
-    Scale shape: quantizer as audited in embedding_kmeans_cells (no
-    window, broadcast-array argmax), then the usual IVF equi-join on
-    the cell id — never a corpus product."""
-    from ..operators.kmeans import kmeans_cells
-    from ..operators.topk import ivf_topk
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cells = kmeans_cells(emb, k=8, iters=2).select("vec_id", "cell")
-        quantized = emb.join(cells, "vec_id")
-        out = ivf_topk(quantized, _queries_df(emb), k=5, n_probe=2, coarse_col="cell")
-        return out.select(
-            "q_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-            F.col("rank").cast("int"),
-        )
-
-    fn.__name__ = "embedding_ivf_kmeans_topk"
-    member(
-        "embedding_ivf_kmeans_topk",
-        oracle=_ivf_kmeans_oracle_sql(),
-        doc=_register_ivf_kmeans_topk.__doc__,
-    )(fn)
 
 
 def _near_dup_oracle_sql(
@@ -454,43 +402,56 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
 
 
+def _kmeans_ctes(k: int, iters: int, dim: int) -> str:
+    """The kmeans_cells schedule unrolled over the `embeddings` table:
+    `emb`, the k-smallest-id seeds `c0`, then for rounds r = 1..iters
+    the 6dp-quantized cosine argmax `a{r}` (vec_id, v, cell, cos)
+    against `c{r-1}`, with the per-cell elementwise mean `c{r}`
+    between rounds — empty cells shrink away as in the operator."""
+    ctes = [
+        "emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
+        f"""c0 AS (
+      SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell, v AS c
+      FROM emb QUALIFY row_number() OVER (ORDER BY vec_id ASC) <= {k}
+    )""",
+    ]
+    for r in range(1, iters + 1):
+        if r > 1:
+            ctes.append(f"""cx{r - 1} AS (
+      SELECT cell, r.i AS i, avg(v[r.i]) AS m
+      FROM a{r - 1}, LATERAL unnest(range(1, {dim + 1})) AS r(i)
+      GROUP BY cell, r.i
+    ),
+    c{r - 1} AS (SELECT cell, list(m ORDER BY i) AS c FROM cx{r - 1} GROUP BY cell)""")
+        ctes.append(f"""a{r} AS (
+      SELECT e.vec_id, e.v, s.cell,
+             round(list_cosine_similarity(e.v, s.c), 6) AS cos
+      FROM emb e CROSS JOIN c{r - 1} s
+      QUALIFY row_number() OVER (PARTITION BY e.vec_id
+                                 ORDER BY cos DESC, s.cell ASC) = 1
+    )""")
+    return ",\n    ".join(ctes)
+
+
+def _kmeans_oracle_sql(k: int = 8, iters: int = 2, dim: int = EMB_DIM) -> str:
+    """The embedding_kmeans_cells oracle at any (k, iters, dim)."""
+    return f"""
+    WITH {_kmeans_ctes(k, iters, dim)}
+    SELECT vec_id, CAST(cell AS BIGINT) AS cell, cos AS cell_cos FROM a{iters}
+    """
+
+
 @member(
     "embedding_kmeans_cells",
     doc="K-means coarse quantizer (operators/kmeans.kmeans_cells): "
     "deterministic seeding (k smallest ids), 2 Lloyd assignment "
-    "rounds as pure DataFrame ops — crossJoin(broadcast(centroids)) "
-    "-> 6dp-quantized cosine argmax -> per-cell elementwise mean. "
-    "The geometric cell assignment ivf_topk needs at scale (SCALE.md "
-    "records label-cells bounding IVF recall); the oracle unrolls "
-    "the identical schedule in SQL.",
-    oracle="""
-    WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    seeds AS (
-      SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell, v AS c
-      FROM emb QUALIFY row_number() OVER (ORDER BY vec_id ASC) <= 8
-    ),
-    a1 AS (
-      SELECT e.vec_id, e.v, s.cell,
-             round(list_cosine_similarity(e.v, s.c), 6) AS cos
-      FROM emb e CROSS JOIN seeds s
-      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-                                 ORDER BY cos DESC, s.cell ASC) = 1
-    ),
-    cx AS (
-      SELECT cell, r.i AS i, avg(v[r.i]) AS m
-      FROM a1, LATERAL unnest(range(1, 65)) AS r(i)
-      GROUP BY cell, r.i
-    ),
-    c1 AS (SELECT cell, list(m ORDER BY i) AS c FROM cx GROUP BY cell),
-    a2 AS (
-      SELECT e.vec_id, c1.cell,
-             round(list_cosine_similarity(e.v, c1.c), 6) AS cos
-      FROM emb e CROSS JOIN c1
-      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-                                 ORDER BY cos DESC, c1.cell ASC) = 1
-    )
-    SELECT vec_id, CAST(cell AS BIGINT) AS cell, cos AS cell_cos FROM a2
-    """,
+    "rounds — each one mapInArrow pass scoring the corpus against the "
+    "driver's centroid matrix (6dp-quantized cosine argmax), then the "
+    "per-cell elementwise mean, collected (k rows). The geometric "
+    "cell assignment ivf_topk needs at scale (SCALE.md records "
+    "label-cells bounding IVF recall); the oracle unrolls the "
+    "identical schedule in SQL.",
+    oracle=_kmeans_oracle_sql(),
 )
 def embedding_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_cells
@@ -498,6 +459,54 @@ def embedding_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     out = kmeans_cells(emb, k=8, iters=2)
     return out.select("vec_id", F.col("cell").cast("bigint").alias("cell"), "cell_cos")
+
+
+def _ivf_kmeans_oracle_sql() -> str:
+    """IVF probe logic over the GEOMETRIC k-means cells instead of the
+    label column: the quantizer CTE is the embedding_kmeans_cells
+    oracle (same schedule, seeding, quantized argmax), so the
+    composed path is value-checked end to end."""
+    return f"""
+    WITH cells AS ({_kmeans_oracle_sql()}),
+    e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    {_coarse_probe_ctes("e")},
+    scored AS (
+      SELECT p.q_id, a.vec_id AS neighbor_id,
+             list_cosine_similarity(a.v, p.qv) AS cos
+      FROM a JOIN probes p ON a.cell = p.cell
+      WHERE a.vec_id <> p.q_id
+    )
+    SELECT q_id, neighbor_id, round(cos, 6) AS cos, CAST(rank AS INT) AS rank
+    FROM (SELECT *, row_number() OVER (
+            PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rank
+          FROM scored)
+    WHERE rank <= 5
+    """
+
+
+@member(
+    "embedding_ivf_kmeans_topk",
+    doc="The PRODUCTION ANN composition (round 6): IVF inverted lists "
+    "over the GEOMETRIC k-means quantizer — the pairing SCALE.md "
+    "measured taking IVF recall from 0.0 (random label cells) to 1.0 "
+    "on the 20k replica corpus, now registered and driver-checked. "
+    "Scale shape: quantizer as audited in embedding_kmeans_cells (no "
+    "window, one Arrow assignment pass), then the usual IVF equi-join "
+    "on the cell id — never a corpus product.",
+    oracle=_ivf_kmeans_oracle_sql(),
+)
+def embedding_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.kmeans import kmeans_cells
+    from ..operators.topk import ivf_topk
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cells = kmeans_cells(emb, k=8, iters=2).select("vec_id", "cell")
+    quantized = emb.join(cells, "vec_id")
+    out = ivf_topk(quantized, _queries_df(emb), k=5, n_probe=2, coarse_col="cell")
+    return out.select(
+        "q_id", "neighbor_id", F.round("cos", 6).alias("cos"),
+        F.col("rank").cast("int"),
+    )
 
 
 @member(
@@ -516,32 +525,8 @@ def embedding_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "which has no lower-id pointer. The oracle replays the identical "
     "quantizer schedule, pair rule, and chain resolution (recursive "
     "pointer walk; min(cur) = the terminal since ids decrease).",
-    oracle="""
-    WITH RECURSIVE emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    seeds AS (
-      SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell, v AS c
-      FROM emb QUALIFY row_number() OVER (ORDER BY vec_id ASC) <= 8
-    ),
-    a1 AS (
-      SELECT e.vec_id, e.v, s.cell,
-             round(list_cosine_similarity(e.v, s.c), 6) AS cos
-      FROM emb e CROSS JOIN seeds s
-      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-                                 ORDER BY cos DESC, s.cell ASC) = 1
-    ),
-    cx AS (
-      SELECT cell, r.i AS i, avg(v[r.i]) AS m
-      FROM a1, LATERAL unnest(range(1, 65)) AS r(i)
-      GROUP BY cell, r.i
-    ),
-    c1 AS (SELECT cell, list(m ORDER BY i) AS c FROM cx GROUP BY cell),
-    a2 AS (
-      SELECT e.vec_id, e.v, c1.cell,
-             round(list_cosine_similarity(e.v, c1.c), 6) AS cos
-      FROM emb e CROSS JOIN c1
-      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-                                 ORDER BY cos DESC, c1.cell ASC) = 1
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_kmeans_ctes(8, 2, EMB_DIM)},
     dups AS (
       SELECT y.vec_id AS id_b, min(x.vec_id) AS sem_dup_of
       FROM a2 x JOIN a2 y ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -616,62 +601,59 @@ def embedding_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# registered last: its oracle embeds the embedding_kmeans_cells member
-# oracle, which must exist first
-_register_ivf_kmeans_topk()
-
-
-def _pq_ctes(src: str) -> str:
+def _pq_ctes(
+    src: str, m: int = 8, k: int = 16, iters: int = 2, dim: int = EMB_DIM
+) -> str:
     """The PQ training/coding CTE chain (through `codes`, which carries
     the per-vector reconstruction) over a `src` CTE exposing
     (vec_id, v) — shared by the embedding_pq_codes /
     embedding_pq_adc_topk / embedding_pq_rerank_topk / IVF-PQ oracles
     (src='emb', training on the raw vectors) AND the IVFADC residual
     oracle (src='res', training on the coarse residuals), so every PQ
-    member replays the identical 2-round Lloyd schedule."""
-    return f"""seeds AS (
+    member replays the identical Lloyd schedule: k-smallest-id seeds
+    sliced into m subspaces (`cb0`), then for rounds r = 1..iters the
+    6dp-rounded L2 argmin `pa{r}` against `cb{r-1}`, with the
+    per-(subspace, cell) mean `cb{r}` between rounds."""
+    ds = dim // m
+    ctes = [
+        f"""seeds AS (
       SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell, v
-      FROM {src} QUALIFY row_number() OVER (ORDER BY vec_id ASC) <= 16
-    ),
-    sub AS (
-      SELECT vec_id, r.j AS j, list_slice(v, r.j * 8 + 1, r.j * 8 + 8) AS sv
-      FROM {src}, LATERAL unnest(range(0, 8)) AS r(j)
-    ),
-    scb AS (
-      SELECT cell, r.j AS j, list_slice(v, r.j * 8 + 1, r.j * 8 + 8) AS cv
-      FROM seeds, LATERAL unnest(range(0, 8)) AS r(j)
-    ),
-    a1 AS (
-      SELECT sub.vec_id, sub.j, scb.cell, sub.sv
-      FROM sub JOIN scb USING (j)
-      QUALIFY row_number() OVER (
-        PARTITION BY sub.vec_id, sub.j
-        ORDER BY round(list_sum(list_transform(range(1, 9),
-                  i -> (sv[i] - cv[i]) * (sv[i] - cv[i]))), 6) ASC,
-                 scb.cell ASC) = 1
-    ),
-    cx AS (
+      FROM {src} QUALIFY row_number() OVER (ORDER BY vec_id ASC) <= {k}
+    )""",
+        f"""sub AS (
+      SELECT vec_id, r.j AS j, list_slice(v, r.j * {ds} + 1, r.j * {ds} + {ds}) AS sv
+      FROM {src}, LATERAL unnest(range(0, {m})) AS r(j)
+    )""",
+        f"""cb0 AS (
+      SELECT cell, r.j AS j, list_slice(v, r.j * {ds} + 1, r.j * {ds} + {ds}) AS cv
+      FROM seeds, LATERAL unnest(range(0, {m})) AS r(j)
+    )""",
+    ]
+    for r in range(1, iters + 1):
+        if r > 1:
+            ctes.append(f"""pcx{r - 1} AS (
       SELECT j, cell, r.i AS i, avg(sv[r.i]) AS m
-      FROM a1, LATERAL unnest(range(1, 9)) AS r(i)
+      FROM pa{r - 1}, LATERAL unnest(range(1, {ds + 1})) AS r(i)
       GROUP BY j, cell, r.i
     ),
-    c1 AS (SELECT j, cell, list(m ORDER BY i) AS cv FROM cx GROUP BY j, cell),
-    a2 AS (
-      SELECT sub.vec_id, sub.j, c1.cell
-      FROM sub JOIN c1 USING (j)
+    cb{r - 1} AS (SELECT j, cell, list(m ORDER BY i) AS cv FROM pcx{r - 1} GROUP BY j, cell)""")
+        ctes.append(f"""pa{r} AS (
+      SELECT sub.vec_id, sub.j, cb.cell, sub.sv
+      FROM sub JOIN cb{r - 1} cb USING (j)
       QUALIFY row_number() OVER (
         PARTITION BY sub.vec_id, sub.j
-        ORDER BY round(list_sum(list_transform(range(1, 9),
-                  i -> (sv[i] - c1.cv[i]) * (sv[i] - c1.cv[i]))), 6) ASC,
-                 c1.cell ASC) = 1
-    ),
-    codes AS (
-      SELECT a2.vec_id,
-             string_agg(a2.cell::VARCHAR, '-' ORDER BY a2.j) AS pq_code,
-             flatten(list(c1.cv ORDER BY a2.j)) AS recon
-      FROM a2 JOIN c1 USING (j, cell)
-      GROUP BY a2.vec_id
-    )"""
+        ORDER BY round(list_sum(list_transform(range(1, {ds + 1}),
+                  i -> (sv[i] - cb.cv[i]) * (sv[i] - cb.cv[i]))), 6) ASC,
+                 cb.cell ASC) = 1
+    )""")
+    ctes.append(f"""codes AS (
+      SELECT pa.vec_id,
+             string_agg(pa.cell::VARCHAR, '-' ORDER BY pa.j) AS pq_code,
+             flatten(list(cb.cv ORDER BY pa.j)) AS recon
+      FROM pa{iters} pa JOIN cb{iters - 1} cb USING (j, cell)
+      GROUP BY pa.vec_id
+    )""")
+    return ",\n    ".join(ctes)
 
 
 _PQ_CTES = (
@@ -680,6 +662,21 @@ _PQ_CTES = (
     """
     + _pq_ctes("emb")
 )
+
+
+def _pq_codes_oracle_sql(
+    m: int = 8, k: int = 16, iters: int = 2, dim: int = EMB_DIM
+) -> str:
+    """The embedding_pq_codes oracle at any (m, k, iters, dim)."""
+    return f"""
+    WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    {_pq_ctes("emb", m, k, iters, dim)}
+    SELECT c.vec_id, c.pq_code,
+           round(sqrt(list_sum(list_transform(range(1, {dim + 1}),
+             i -> (e.v[i] - c.recon[i]) * (e.v[i] - c.recon[i])))), 6) AS pq_l2_err,
+           round(list_cosine_similarity(e.v, c.recon), 6) AS pq_recon_cos
+    FROM codes c JOIN emb e USING (vec_id)
+    """
 
 
 @member(
@@ -691,17 +688,10 @@ _PQ_CTES = (
     "id seeds, 2 assignment rounds, 6dp-rounded L2 argmin, ascending-"
     "cell tie-break). Output: the 32-bit code per vector (vs 64 "
     "doubles — 128x) plus the reconstruction audit (L2 error + cosine "
-    "to the original). Assignment is pure expressions over ONE "
-    "broadcast codebook row; the oracle unrolls the identical "
-    "schedule in SQL.",
-    oracle=f"""
-    WITH {_PQ_CTES}
-    SELECT c.vec_id, c.pq_code,
-           round(sqrt(list_sum(list_transform(range(1, 65),
-             i -> (e.v[i] - c.recon[i]) * (e.v[i] - c.recon[i])))), 6) AS pq_l2_err,
-           round(list_cosine_similarity(e.v, c.recon), 6) AS pq_recon_cos
-    FROM codes c JOIN emb e USING (vec_id)
-    """,
+    "to the original). Assignment is one mapInArrow pass per round "
+    "against the driver's codebook (m*k sub-centroids, collected); "
+    "the oracle unrolls the identical schedule in SQL.",
+    oracle=_pq_codes_oracle_sql(),
 )
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import pq_codes
@@ -796,118 +786,60 @@ def embedding_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_rerank_topk(emb, _queries_df(emb), k=5, candidates=20)
 
 
-def _ivfpq_oracle_sql() -> str:
+def _ivf_pq_oracle_sql(
+    residual: bool,
+    k_coarse: int = 8,
+    m: int = 8,
+    k_cells: int = 16,
+    iters: int = 2,
+    dim: int = EMB_DIM,
+    candidates: int = 20,
+    every: int = 50,
+) -> str:
     """The full IVF-PQ pipeline oracle: the coarse-quantizer CTE is
-    the embedding_kmeans_cells member oracle verbatim; the PQ chain
-    is the shared _PQ_CTES; probing/centroids are the shared
-    _coarse_probe_ctes block (literally the same SQL
-    embedding_ivf_kmeans_topk composes); ADC runs over probed cells
-    only, then the true-cosine re-rank."""
-    from .registry import member_oracle
+    the embedding_kmeans_cells oracle; probing/centroids are the
+    shared _coarse_probe_ctes block (literally the same SQL
+    embedding_ivf_kmeans_topk composes); `rfull` is the indexed
+    reconstruction; ADC runs over probed cells only, then the
+    true-cosine re-rank of the `candidates`-deep shortlist.
 
-    return f"""
-    WITH cells AS ({member_oracle("embedding_kmeans_cells")}),
-    {_PQ_CTES},
-    {_coarse_probe_ctes("emb")},
-    adc AS (
-      SELECT p.q_id, co.vec_id AS neighbor_id,
-             round(list_sum(list_transform(range(1, 65),
-               i -> (p.qv[i] - co.recon[i]) * (p.qv[i] - co.recon[i]))), 6) AS adc,
-             round(list_cosine_similarity(p.qv, a.v), 6) AS cos
-      FROM codes co
-      JOIN a ON a.vec_id = co.vec_id
-      JOIN probes p ON a.cell = p.cell
-      WHERE co.vec_id <> p.q_id
-    ),
-    shortlist AS (
-      SELECT q_id, neighbor_id, cos
-      FROM adc
-      QUALIFY row_number() OVER (PARTITION BY q_id
-                                 ORDER BY adc ASC, neighbor_id ASC) <= 20
-    )
-    SELECT q_id, neighbor_id, cos, CAST(rank AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-          FROM shortlist)
-    WHERE rank <= 5
-    """
-
-
-def _register_ivfpq_topk() -> None:
-    """The FULL IVF-PQ serving pipeline as one driver-checked member
-    (round-7 verdict #6; operators/kmeans.ivf_pq_rerank_topk): coarse
-    k-means cells (k=8) -> per-vector PQ codes (8x16) -> queries
-    probe their 2 nearest coarse centroids -> ADC over probed cells
-    only -> 20-deep shortlist -> TRUE-cosine re-rank -> top-5. The
-    Jégou pipeline end to end, every stage value-checked against the
-    composed oracle (quantizer CTE = the kmeans member oracle, PQ
-    chain = the shared CTE block). Recall dials: (n_probe,
-    candidates) — STRESS_r08 splits coarse-probe/ADC/re-rank cost.
-
-    NOTE (r11 advice): the probe half defaults to the BLAS ADC path,
-    which runs EAGER Spark jobs at DataFrame-construction time (the
-    bounded O(queries x n_probe) probe-assignment collect that the
-    Arrow pass closes over) — building this member's plan is not
-    job-free, and the probed-cell set is frozen at call time. The
-    plan-audit allowlist carries the entry."""
-    from ..operators.kmeans import ivf_pq_rerank_topk
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        # the member PINS (m=8, k_cells=16): the oracle CTE replays
-        # exactly this 32-bit dial, and at the registered 500-vector
-        # scale the density rule wants the SMALL code — the production
-        # default dial (ivf_pq_build) tracks the 2M-measured budget
-        # instead (r12 sweep) and must not leak in here
-        return ivf_pq_rerank_topk(
-            emb, _queries_df(emb), k=5, candidates=20, n_probe=2, k_coarse=8,
-            m=8, k_cells=16, residual=False,
-        )
-
-    fn.__name__ = "embedding_ivfpq_topk"
-    member(
-        "embedding_ivfpq_topk",
-        oracle=_ivfpq_oracle_sql(),
-        doc=_register_ivfpq_topk.__doc__,
-        # NOT bench-flagged since round 9: the combined row re-trains
-        # the index inside the query and reported mostly build wall as
-        # if it were serving cost — bench.py now carries the honest
-        # split (embedding_ivfadc_build amortized / _probe per batch)
-    )(fn)
-
-
-def _ivfadc_oracle_sql() -> str:
-    """The RESIDUAL IVF-PQ (IVFADC) oracle: identical composed chain to
-    _ivfpq_oracle_sql except PQ trains on the 6dp-rounded residuals
-    v − centroid[cell(v)] (the `res` CTE feeds the shared _pq_ctes
-    block) and the indexed reconstruction is centroid + pq_recon —
-    ADC against it is algebraically the paper's subtract-the-centroid
-    distance. The residual rounding pins the PQ training input to one
-    cross-engine value (coarse centroids are float avg() aggregates
-    whose accumulation order the engines don't fix)."""
-    from .registry import member_oracle
-
-    return f"""
-    WITH cells AS ({member_oracle("embedding_kmeans_cells")}),
-    emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    {_coarse_probe_ctes("emb")},
-    res AS (
+    Direct coding trains the shared PQ chain on the raw vectors.
+    RESIDUAL coding (IVFADC) trains it on the 6dp-rounded residuals
+    v − centroid[cell(v)] (the `res` CTE) and indexes
+    centroid + pq_recon — ADC against it is algebraically the paper's
+    subtract-the-centroid distance. The residual rounding pins the PQ
+    training input to one cross-engine value (coarse centroids are
+    float avg() aggregates whose accumulation order the engines don't
+    fix)."""
+    if residual:
+        coded = f"""res AS (
       SELECT a.vec_id,
-             list_transform(range(1, 65),
+             list_transform(range(1, {dim + 1}),
                i -> round(a.v[i] - c.centroid[i], 6)) AS v
       FROM a JOIN cent2 c USING (cell)
     ),
-    {_pq_ctes("res")},
+    {_pq_ctes("res", m, k_cells, iters, dim)},
     rfull AS (
       SELECT co.vec_id, a.cell,
-             list_transform(range(1, 65),
+             list_transform(range(1, {dim + 1}),
                i -> c2.centroid[i] + co.recon[i]) AS recon
       FROM codes co JOIN a ON a.vec_id = co.vec_id
                     JOIN cent2 c2 ON c2.cell = a.cell
-    ),
+    )"""
+    else:
+        coded = f"""{_pq_ctes("emb", m, k_cells, iters, dim)},
+    rfull AS (
+      SELECT co.vec_id, a.cell, co.recon
+      FROM codes co JOIN a ON a.vec_id = co.vec_id
+    )"""
+    return f"""
+    WITH cells AS ({_kmeans_oracle_sql(k_coarse, iters, dim)}),
+    emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    {_coarse_probe_ctes("emb", dim=dim, every=every)},
+    {coded},
     adc AS (
       SELECT p.q_id, rf.vec_id AS neighbor_id,
-             round(list_sum(list_transform(range(1, 65),
+             round(list_sum(list_transform(range(1, {dim + 1}),
                i -> (p.qv[i] - rf.recon[i]) * (p.qv[i] - rf.recon[i]))), 6) AS adc
       FROM rfull rf JOIN probes p ON rf.cell = p.cell
       WHERE rf.vec_id <> p.q_id
@@ -916,7 +848,7 @@ def _ivfadc_oracle_sql() -> str:
       SELECT q_id, neighbor_id
       FROM adc
       QUALIFY row_number() OVER (PARTITION BY q_id
-                                 ORDER BY adc ASC, neighbor_id ASC) <= 20
+                                 ORDER BY adc ASC, neighbor_id ASC) <= {candidates}
     ),
     true_cos AS (
       SELECT s.q_id, s.neighbor_id,
@@ -932,37 +864,62 @@ def _ivfadc_oracle_sql() -> str:
     """
 
 
-def _register_ivfadc_topk() -> None:
-    """IVFADC — the RESIDUAL-coded IVF-PQ serving pipeline (Jégou et
-    al., TPAMI 2011 §V, the form FAISS ships as IVFPQ; operators/
-    kmeans.ivf_pq_rerank_topk with residual=True): PQ trains on and
-    codes v − centroid[cell(v)] instead of v, so the codebook budget
-    spends on within-cell detail after the coarse quantizer explains
-    the between-cell variance — STRESS prices the recall gain over
-    the direct-coded sibling at the same (m, k_cells) dial. Probe,
-    shortlist, and re-rank are identical to embedding_ivfpq_topk;
-    only the indexed reconstruction changes. Like that sibling, the
-    default BLAS probe runs eager plan-time jobs (the bounded probe
-    collect — see embedding_ivfpq_topk's note)."""
+@member(
+    "embedding_ivfpq_topk",
+    doc="The FULL IVF-PQ serving pipeline as one driver-checked member "
+    "(operators/kmeans.ivf_pq_rerank_topk): coarse k-means cells (k=8) "
+    "-> per-vector PQ codes (8x16) -> queries probe their 2 nearest "
+    "coarse centroids -> ADC over probed cells only -> 20-deep "
+    "shortlist -> TRUE-cosine re-rank -> top-5. The Jégou pipeline end "
+    "to end, every stage value-checked against the composed oracle "
+    "(quantizer CTE = the kmeans oracle, PQ chain = the shared CTE "
+    "block). Recall dials: (n_probe, candidates) — STRESS_r08 splits "
+    "coarse-probe/ADC/re-rank cost. Building the plan runs the "
+    "quantizers' bounded training collects and the O(queries x "
+    "n_probe) probe-assignment collect the ADC Arrow pass closes over; "
+    "the probed-cell set is frozen at call time.",
+    oracle=_ivf_pq_oracle_sql(residual=False),
+    # NOT bench-flagged: the combined row re-trains the index inside
+    # the query and would report mostly build wall as serving cost —
+    # bench.py carries the honest split (embedding_ivfadc_build
+    # amortized / _probe per batch)
+)
+def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import ivf_pq_rerank_topk
 
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        # pinned (m=8, k_cells=16) like embedding_ivfpq_topk — the
-        # oracle replays this dial; production defaults track the 2M
-        # sweep
-        return ivf_pq_rerank_topk(
-            emb, _queries_df(emb), k=5, candidates=20, n_probe=2, k_coarse=8,
-            m=8, k_cells=16, residual=True,
-        )
-
-    fn.__name__ = "embedding_ivfadc_topk"
-    member(
-        "embedding_ivfadc_topk",
-        oracle=_ivfadc_oracle_sql(),
-        doc=_register_ivfadc_topk.__doc__,
-    )(fn)
+    emb = load_table(spark, sf_dir, "embeddings")
+    # the member PINS (m=8, k_cells=16): the oracle CTE replays
+    # exactly this 32-bit dial, and at the registered 500-vector
+    # scale the density rule wants the SMALL code — the production
+    # default dial (ivf_pq_build) tracks the 2M-measured budget
+    # instead (r12 sweep) and must not leak in here
+    return ivf_pq_rerank_topk(
+        emb, _queries_df(emb), k=5, candidates=20, n_probe=2, k_coarse=8,
+        m=8, k_cells=16, residual=False,
+    )
 
 
-_register_ivfpq_topk()
-_register_ivfadc_topk()
+@member(
+    "embedding_ivfadc_topk",
+    doc="IVFADC — the RESIDUAL-coded IVF-PQ serving pipeline (Jégou et "
+    "al., TPAMI 2011 §V, the form FAISS ships as IVFPQ; operators/"
+    "kmeans.ivf_pq_rerank_topk with residual=True): PQ trains on and "
+    "codes v − centroid[cell(v)] instead of v, so the codebook budget "
+    "spends on within-cell detail after the coarse quantizer explains "
+    "the between-cell variance — STRESS prices the recall gain over "
+    "the direct-coded sibling at the same (m, k_cells) dial. Probe, "
+    "shortlist, and re-rank are identical to embedding_ivfpq_topk, "
+    "eager plan-time collects included; only the indexed "
+    "reconstruction changes.",
+    oracle=_ivf_pq_oracle_sql(residual=True),
+)
+def embedding_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.kmeans import ivf_pq_rerank_topk
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    # pinned (m=8, k_cells=16) like embedding_ivfpq_topk — the oracle
+    # replays this dial; production defaults track the 2M sweep
+    return ivf_pq_rerank_topk(
+        emb, _queries_df(emb), k=5, candidates=20, n_probe=2, k_coarse=8,
+        m=8, k_cells=16, residual=True,
+    )

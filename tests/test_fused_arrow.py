@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from japanstockdatapipeline_spark.functions import semantics as SEM
@@ -249,3 +250,29 @@ def test_arrow_pass_null_and_empty_semantics(spark):
     # marker tie: fixed order keeps the earlier language? both 1 hit ->
     # zh/es/fr fail strictly-greater, de wins its > 0 check
     assert rows[14]["pred_lang"] == "de"
+
+
+@pytest.mark.parametrize(
+    "name,via",
+    [
+        ("__cum", "extra_cols"),
+        ("n_shared_grams", "extra_cols"),
+        ("is_contaminated", "extra_cols"),
+        ("pack_shard", "extra_cols"),
+        ("__cum", "pre_window"),
+        ("pack_n_tokens", "pre_window"),
+    ],
+)
+def test_fused_rejects_reserved_staged_columns(spark, name, via):
+    """The fused tail appends __cum / n_shared_grams / is_contaminated
+    / pack_* with select("*", …): a caller staging one of those names
+    must get a ValueError naming it, not a duplicated column that
+    fails later with AMBIGUOUS_REFERENCE."""
+    staged = F.lit(0).alias(name)
+    kwargs = (
+        {"extra_cols": [staged]}
+        if via == "extra_cols"
+        else {"pre_window": lambda df: df.select("*", staged)}
+    )
+    with pytest.raises(ValueError, match=repr(name)):
+        doc_features_fused(_edge_docs(spark), **kwargs)

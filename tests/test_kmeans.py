@@ -4,12 +4,19 @@ IVF-recall motivation — geometric cells recover what label cells lose
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from tools.verify_local import normalize
 
 from japanstockdatapipeline_spark.operators.kmeans import kmeans_cells
 from japanstockdatapipeline_spark.operators.topk import brute_force_topk, ivf_topk
+from japanstockdatapipeline_spark.plans.similarity import (
+    _ivf_pq_oracle_sql,
+    _kmeans_oracle_sql,
+    _pq_codes_oracle_sql,
+)
 
 
 def _clustered_vectors(rng, n_clusters=3, per_cluster=30, dim=8):
@@ -344,31 +351,61 @@ def test_ivfadc_rerank_matches_brute_on_probed_cells(spark, clustered):
     assert got == exact
 
 
-def test_kmeans_cells_blas_matches_expression(spark, clustered):
-    """r11 verdict #3: the BLAS Lloyd loop (driver-looped numpy
-    assignment) must produce value-IDENTICAL (vec_id, cell, cell_cos)
-    to the lazy expression form — same seeding, same 6dp HALF_UP
-    argmax with min-cell ties, same empty-cell shrinkage."""
-    from japanstockdatapipeline_spark.operators.kmeans import kmeans_cells
-
-    for k, iters in ((3, 2), (5, 3)):
-        expr = {
-            tuple(r) for r in kmeans_cells(clustered, k=k, iters=iters).collect()
-        }
-        fast = {
-            tuple(r)
-            for r in kmeans_cells(
-                clustered, k=k, iters=iters, assign_mode="blas"
-            ).collect()
-        }
-        assert expr == fast, f"k={k} iters={iters}"
+@pytest.fixture(scope="module")
+def clustered_duck(clustered, tmp_path_factory):
+    """DuckDB connection whose `embeddings` view is the clustered
+    fixture written to parquet — the table the oracle builders read."""
+    path = str(tmp_path_factory.mktemp("clustered") / "embeddings")
+    clustered.select("vec_id", "embedding").coalesce(1).write.parquet(path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    return con
 
 
-def test_ivf_pq_probe_blas_matches_expression(spark, clustered):
-    """r11 verdict #2: the BLAS ADC probe (one mapInPandas matmul over
-    the probed cells) must be value-IDENTICAL to the join+fold
-    expression form — same probe cells, same 6dp-rounded shortlist
-    order and boundary ties, same re-rank — in both coding modes."""
+def _assert_matches_oracle(sdf, con, sql):
+    res = con.execute(sql)
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert sorted(sdf.columns) == sorted(dcols)
+    srows = [tuple(r) for r in sdf.collect()]
+    assert len(srows) == len(drows)
+    assert normalize(srows, sdf.columns) == normalize(drows, dcols)
+
+
+@pytest.mark.parametrize("k,iters", [(3, 2), (5, 3)])
+def test_kmeans_cells_matches_duckdb(spark, clustered, clustered_duck, k, iters):
+    """Same seeding, same 6dp HALF_UP argmax with min-cell ties, same
+    empty-cell shrinkage as the member oracle, at (k, iters) off the
+    registered dial — (5, 3) on three tight clusters shrinks cells."""
+    _assert_matches_oracle(
+        kmeans_cells(clustered, k=k, iters=iters),
+        clustered_duck,
+        _kmeans_oracle_sql(k, iters, dim=8),
+    )
+
+
+@pytest.mark.parametrize("iters", [1, 2, 3])
+def test_pq_codes_matches_duckdb(spark, clustered, clustered_duck, iters):
+    """Same seeds, same 6dp HALF_UP distance argmin with min-cell
+    ties, same shrinkage, same codebook means (the reconstruction
+    audit columns are computed from them)."""
+    from japanstockdatapipeline_spark.operators.kmeans import pq_codes
+
+    _assert_matches_oracle(
+        pq_codes(clustered, m=4, k=5, iters=iters, dim=8),
+        clustered_duck,
+        _pq_codes_oracle_sql(m=4, k=5, iters=iters, dim=8),
+    )
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_ivf_pq_probe_matches_duckdb(spark, clustered, clustered_duck, residual):
+    """The Arrow ADC probe against the composed IVF-PQ oracle: same
+    probe cells, same 6dp-rounded shortlist order and boundary ties at
+    a shallow (7-deep) shortlist, same re-rank — in both coding
+    modes."""
     from japanstockdatapipeline_spark.operators.kmeans import (
         ivf_pq_build,
         ivf_pq_probe,
@@ -377,75 +414,74 @@ def test_ivf_pq_probe_blas_matches_expression(spark, clustered):
     queries = clustered.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    for residual in (False, True):
-        handles = []
-        index, cents = ivf_pq_build(
-            clustered, k_coarse=3, m=8, k_cells=16, dim=8,
-            residual=residual, persisted_out=handles,
-        )
-        expr = ivf_pq_probe(
-            index, cents, queries, clustered, k=5, candidates=7, n_probe=2,
-            blas=False,
-        )
-        fast = ivf_pq_probe(
-            index, cents, queries, clustered, k=5, candidates=7, n_probe=2,
-            blas=True,
-        )
-        assert sorted(map(tuple, expr.collect())) == sorted(
-            map(tuple, fast.collect())
-        ), f"residual={residual}"
-        for h in handles:
-            h.unpersist()
+    handles = []
+    index, cents = ivf_pq_build(
+        clustered, k_coarse=3, m=8, k_cells=16, dim=8,
+        residual=residual, persisted_out=handles,
+    )
+    _assert_matches_oracle(
+        ivf_pq_probe(
+            index, cents, queries, clustered, k=5, candidates=7, n_probe=2
+        ),
+        clustered_duck,
+        _ivf_pq_oracle_sql(
+            residual, k_coarse=3, m=8, k_cells=16, dim=8, candidates=7, every=20
+        ),
+    )
+    for h in handles:
+        h.unpersist()
 
 
 def test_kmeans_cells_iters_guard_both_modes(spark, clustered):
-    """r11 advice: iters < 1 must raise in BOTH modes before dispatch
-    (the expr path used to quietly run one assignment while the blas
-    path crashed with AttributeError — a schedule-edge parity break)."""
-    import pytest
-
-    from japanstockdatapipeline_spark.operators.kmeans import kmeans_cells
-
-    for mode in ("expr", "blas"):
-        with pytest.raises(ValueError, match="iters"):
-            kmeans_cells(clustered, k=3, iters=0, assign_mode=mode)
-
-
-def test_kmeans_cells_blas_rejects_null_vectors(spark):
-    """r11 advice: a null embedding row must fail DETERMINISTICALLY in
-    the Arrow path (a silent reshape misalignment would corrupt every
-    subsequent row of the batch), not produce wrong cells."""
-    import pytest
-
-    from japanstockdatapipeline_spark.operators.kmeans import kmeans_cells
-
-    rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, None), (3, [0.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with pytest.raises(Exception, match="null vector"):
-        kmeans_cells(df, k=2, iters=2, assign_mode="blas").collect()
-
-
-def test_pq_blas_matches_expression(spark, clustered):
-    """r12 verdict #5: the BLAS PQ loop (numpy argmin, Spark codebook
-    recompute) must be value-identical to the lazy expression plan —
-    same seeds, same 6dp HALF_UP distance argmin with min-cell ties,
-    same shrinkage, bit-identical codebook doubles."""
+    """iters < 1 must raise in both quantizers (k-means and PQ) before
+    any job runs, not quietly run one assignment."""
     from japanstockdatapipeline_spark.operators.kmeans import _pq_reconstruct
 
-    for iters in (1, 2, 3):
-        expr = {
-            r["vec_id"]: (r["pq_code"], tuple(round(x, 6) for x in r["__recon"]))
-            for r in _pq_reconstruct(
-                clustered, m=4, k=5, iters=iters, dim=8
-            ).collect()
-        }
-        fast = {
-            r["vec_id"]: (r["pq_code"], tuple(round(x, 6) for x in r["__recon"]))
-            for r in _pq_reconstruct(
-                clustered, m=4, k=5, iters=iters, dim=8, assign_mode="blas"
-            ).collect()
-        }
-        assert expr == fast, f"iters={iters}"
+    with pytest.raises(ValueError, match="iters"):
+        kmeans_cells(clustered, k=3, iters=0)
+    with pytest.raises(ValueError, match="iters"):
+        _pq_reconstruct(clustered, m=4, k=5, iters=0, dim=8)
+
+
+_BAD_VECTORS = {
+    "null_row": [[1.0, 0.0], [0.9, 0.1], None, [0.0, 1.0]],
+    "null_element": [[1.0, 0.0], [0.9, 0.1], [None, 0.5], [0.0, 1.0]],
+    # lengths 3 + 1 cancel out: the batch still holds 4 x 2 elements
+    "ragged": [[1.0, 0.0], [0.9, 0.1], [0.5, 0.5, 0.5], [1.0]],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_VECTORS))
+@pytest.mark.parametrize("kernel", ["kmeans_cells", "_pq_reconstruct", "ivf_pq_probe"])
+def test_vector_kernels_reject_null_and_ragged_rows(spark, kernel, case):
+    """A null or wrong-length vector must fail DETERMINISTICALLY in
+    every Arrow kernel (a silent reshape would misalign every later
+    row of the batch), not produce wrong cells. One partition, so all
+    four rows share one Arrow batch."""
+    from japanstockdatapipeline_spark.operators.kmeans import (
+        _pq_reconstruct,
+        ivf_pq_probe,
+    )
+
+    df = spark.createDataFrame(
+        list(enumerate(_BAD_VECTORS[case])), "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    if kernel == "kmeans_cells":
+        out = kmeans_cells(df, k=2, iters=1)
+    elif kernel == "_pq_reconstruct":
+        out = _pq_reconstruct(df, m=1, k=2, iters=1, dim=2)
+    else:
+        # the bad vectors are the index's reconstructions, all in cell 0
+        corpus = df.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.lit(0).alias("cell"),
+            F.col("embedding").alias("__recon"),
+        )
+        cents = spark.createDataFrame([(0, [1.0, 0.0])], "cell int, __centroid array<double>")
+        queries = spark.createDataFrame([(9, [1.0, 0.0])], "q_id long, q_vec array<double>")
+        out = ivf_pq_probe(corpus, cents, queries, df, k=2, candidates=4, n_probe=1)
+    with pytest.raises(Exception, match="needs non-null vectors of dim 2"):
+        out.collect()
 
 
 def test_pq_blas_sampled_covering_sample_is_identity(spark, clustered):
@@ -456,13 +492,13 @@ def test_pq_blas_sampled_covering_sample_is_identity(spark, clustered):
     base = sorted(
         (r["vec_id"], r["pq_code"])
         for r in _pq_reconstruct(
-            clustered, m=4, k=5, iters=2, dim=8, assign_mode="blas"
+            clustered, m=4, k=5, iters=2, dim=8
         ).collect()
     )
     sampled = sorted(
         (r["vec_id"], r["pq_code"])
         for r in _pq_reconstruct(
-            clustered, m=4, k=5, iters=2, dim=8, assign_mode="blas",
+            clustered, m=4, k=5, iters=2, dim=8,
             train_sample=10_000,
         ).collect()
     )
@@ -473,13 +509,13 @@ def test_kmeans_blas_sampled_covering_sample_is_identity(spark, clustered):
     from japanstockdatapipeline_spark.operators.kmeans import kmeans_cells
 
     base = sorted(
-        map(tuple, kmeans_cells(clustered, k=3, iters=2, assign_mode="blas").collect())
+        map(tuple, kmeans_cells(clustered, k=3, iters=2).collect())
     )
     sampled = sorted(
         map(
             tuple,
             kmeans_cells(
-                clustered, k=3, iters=2, assign_mode="blas", train_sample=10_000
+                clustered, k=3, iters=2, train_sample=10_000
             ).collect(),
         )
     )
@@ -508,8 +544,7 @@ def test_ivf_pq_build_sampled_training_serves(spark, clustered):
         handles = []
         index, cents = ivf_pq_build(
             clustered, k_coarse=3, m=4, k_cells=8, dim=8, residual=True,
-            coarse_assign="blas", pq_assign="blas", train_sample=30,
-            persisted_out=handles,
+            train_sample=30, persisted_out=handles,
         )
         got = ivf_pq_probe(
             index, cents, queries, clustered, k=5, candidates=30, n_probe=3
@@ -524,12 +559,3 @@ def test_ivf_pq_build_sampled_training_serves(spark, clustered):
     got = {(q, n) for q, n, _, _ in a}
     recall = len(got & exact) / len(exact)
     assert recall >= 0.9, recall
-
-
-def test_ivf_pq_build_train_sample_requires_blas(spark, clustered):
-    import pytest
-
-    from japanstockdatapipeline_spark.operators.kmeans import ivf_pq_build
-
-    with pytest.raises(ValueError, match="train_sample"):
-        ivf_pq_build(clustered, dim=8, train_sample=10)

@@ -137,6 +137,14 @@ PLAN_TIME_JOB_ALLOWLIST = {
     # query-matrix collect above
     "embedding_ivfpq_topk",
     "embedding_ivfadc_topk",
+    # the k-means / PQ quantizers train eagerly: the k seed rows, then
+    # per Lloyd round the k centroid rows (k-means) or m*k sub-centroid
+    # rows (PQ) are collected — never the corpus
+    "embedding_kmeans_cells",  # k=8: 8 seed rows + 8 centroid rows
+    "embedding_ivf_kmeans_topk",  # the same k=8 quantizer collects
+    "embedding_pq_codes",  # k=16: 16 seed rows + 8*16 sub-centroid rows
+    "embedding_pq_adc_topk",  # the same PQ codebook collects
+    "embedding_pq_rerank_topk",  # the same PQ codebook collects
     "ann_topk_panel",
     "doc_dup_clusters",
     "corpus_prep_pipeline",

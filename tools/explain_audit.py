@@ -113,7 +113,7 @@ CHECKS = {
         ("BroadcastNestedLoopJoin.*Inner|CartesianProduct", False, "never an all-pairs product"),
     ],
     "embedding_kmeans_cells": [
-        ("BroadcastExchange", True, "centroids broadcast each Lloyd round"),
+        (r"\A(?!.*\(\d+\) MapInArrow.*\(\d+\) MapInArrow).*\(\d+\) MapInArrow", True, "assignment is one MapInArrow pass"),
         ("CartesianProduct", False, "assignment is vectors x 1 broadcast centroid-array row, never corpus x corpus"),
         ("Window", False, "no corpus-wide window: seed is orderBy+limit (partial top-k), argmax is an array expression"),
         ("hashpartitioning\\(vec_id", False, "no per-round corpus x k shuffle on the vector id"),
@@ -197,7 +197,7 @@ CHECKS = {
          "bucket table persisted: totals + scoring join share one tokenize"),
     ],
     "embedding_pq_codes": [
-        ("BroadcastExchange", True, "codebook broadcast each Lloyd round (one row, m*k sub-centroids)"),
+        (r"\A(?!.*\(\d+\) MapInArrow.*\(\d+\) MapInArrow).*\(\d+\) MapInArrow", True, "assignment is one MapInArrow pass"),
         ("CartesianProduct", False, "assignment is vectors x 1 broadcast codebook row, never corpus x codebook rows"),
         ("Window", False, "no corpus-wide window: seed is orderBy+limit, argmin is an array expression"),
         ("hashpartitioning\\(vec_id", False, "no per-round corpus shuffle on the vector id"),

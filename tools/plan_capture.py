@@ -77,7 +77,6 @@ def main() -> None:
     handles: list = []
     index, cents = ivf_pq_build(
         emb, k_coarse=8, m=8, k_cells=16, residual=True, persisted_out=handles,
-        coarse_assign="blas", pq_assign="blas",  # match bench_ann_split (r12)
     )
     index = index.persist()
     cents = cents.persist()

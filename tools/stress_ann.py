@@ -216,10 +216,9 @@ def _disk_probe(
 
 def _ivfadc_focus(spark, corpus, queries, n: int, with_recall) -> None:
     """Residual-coded IVFADC build/probe at the focus scales. The 200k
-    grid documents the DENSITY rule (code budget scales with log2 of
-    per-cluster occupancy — k_cells=64 restores recall 0.99 at the
-    same c80 shortlist where the 20k-shipped 32-bit code saturates at
-    0.92) plus the BLAS build-cost curve. The 2M grid is the r12
+    grid runs the density-scaled code (k_cells=64) through the
+    build-cost curve in k_coarse, sampled vs unsampled training, and
+    the probe-fraction rule. The 2M grid is the r12
     CODE-BUDGET SWEEP (verdict #1): k_cells x m at the shipped probe
     dial, every build SAMPLED-trained (verdict #5: both quantizers
     train on the md5-pinned 100k sample, assignment is the only
@@ -235,17 +234,16 @@ def _ivfadc_focus(spark, corpus, queries, n: int, with_recall) -> None:
     k_sqrt = int(math.isqrt(n))
     p_sqrt = max(2, round(k_sqrt / 16))
     ts = TRAIN_SAMPLE
-    # rows: (k_coarse, m, k_cells, coarse_assign, pq_assign,
-    #        train_sample, disk, sweeps)
+    # rows: (k_coarse, m, k_cells, train_sample, disk, sweeps)
     if n > 500_000:
         grid = (
             # r11 shipped dial, now sampled-trained: the build-wall and
             # recall-parity reference against the 1,035 s unsampled r11
             # row (recall there: 0.727 c80 / 0.806 c320)
-            (16, 8, 64, "blas", "blas", ts, False, ((2, 80), (2, 320))),
+            (16, 8, 64, ts, False, ((2, 80), (2, 320))),
             # the code-budget sweep: +1/+2 codebook bits per subspace
-            (16, 8, 128, "blas", "blas", ts, False, ((2, 80), (2, 320))),
-            (16, 8, 256, "blas", "blas", ts, False, ((2, 80), (2, 320))),
+            (16, 8, 128, ts, False, ((2, 80), (2, 320))),
+            (16, 8, 256, ts, False, ((2, 80), (2, 320))),
             # halve dsub instead (16 subspaces of 4 dims, 96-bit
             # codes): the r12-measured DEFAULT dial — recall >= 0.95
             # at the shipped c80 shortlist with the CHEAPEST build of
@@ -254,53 +252,43 @@ def _ivfadc_focus(spark, corpus, queries, n: int, with_recall) -> None:
             # code budgets — the coarse probe, not the code, owns the
             # last ~3% at p2/k16), and this config also carries the
             # disk-clustered probe audit
-            (16, 16, 64, "blas", "blas", ts, True,
-             ((2, 80), (2, 320), (4, 80), (4, 320))),
-            (16, 16, 128, "blas", "blas", ts, False, ((2, 80),)),
-            (16, 16, 256, "blas", "blas", ts, False, ((2, 80),)),
+            (16, 16, 64, ts, True, ((2, 80), (2, 320), (4, 80), (4, 320))),
+            (16, 16, 128, ts, False, ((2, 80),)),
+            (16, 16, 256, ts, False, ((2, 80),)),
         )
     else:
         grid = (
-            # 20k-shipped code (32-bit): the shortlist-dependence sweep
-            (16, 8, 16, "expr", "expr", None, False, ((2, 80), (2, 320), (2, 640))),
-            # density-scaled code (48-bit): same shortlist, recall back
-            (16, 8, 64, "expr", "expr", None, False, ((2, 80),)),
-            # r11 build-cost curve in k_coarse at the BLAS coarse
-            # assignment (pq still expr — the r11 continuity row)
-            (16, 8, 64, "blas", "expr", None, False, ()),
-            # r12: BLAS PQ + sampled training at 200k, with the disk
-            # probe (verdict #4 asks the cold-index wall at BOTH scales)
-            (16, 8, 64, "blas", "blas", ts, True, ((2, 80),)),
-            # r12: the NEW default dial (m=16, kc=64 — the 2M sweep
-            # winner) back-checked at 200k density
-            (16, 16, 64, "blas", "blas", ts, False, ((2, 80),)),
+            # unsampled build cost: the build-cost curve in k_coarse
+            (16, 8, 64, None, False, ()),
+            # sampled training at 200k, with the disk probe (the
+            # cold-index wall at BOTH scales)
+            (16, 8, 64, ts, True, ((2, 80),)),
+            # the default dial (m=16, kc=64 — the 2M sweep winner)
+            # back-checked at 200k density
+            (16, 16, 64, ts, False, ((2, 80),)),
             # probe fraction must TRACK k_coarse: p2 probes 2/64 of the
             # corpus (recall drops), p8 restores the 1/8 fraction
-            (64, 8, 64, "blas", "expr", None, False, ((2, 80), (8, 80))),
+            (64, 8, 64, None, False, ((2, 80), (8, 80))),
             # k ~ sqrt(n) production pairing with the density-scaled code
-            (k_sqrt, 8, 64, "blas", "expr", None, False, ((p_sqrt, 80),)),
+            (k_sqrt, 8, 64, None, False, ((p_sqrt, 80),)),
         )
-    for k_coarse, m, k_cells, coarse_assign, pq_assign, tsamp, disk, sweeps in grid:
+    for k_coarse, m, k_cells, tsamp, disk, sweeps in grid:
         t_b = time.time()
         handles: list = []
         index, cents = ivf_pq_build(
             corpus, k_coarse=k_coarse, m=m, k_cells=k_cells,
-            residual=True, persisted_out=handles, coarse_assign=coarse_assign,
-            pq_assign=pq_assign, train_sample=tsamp,
+            residual=True, persisted_out=handles, train_sample=tsamp,
         )
         index = index.persist()
         cents = cents.persist()
         index.count()
         cents.count()
         build_sec = round(time.time() - t_b, 2)
-        tag = coarse_assign + ("_pqblas" if pq_assign == "blas" else "")
-        if tsamp:
-            tag += f"_ts{tsamp // 1000}k"
+        tag = f"ts{tsamp // 1000}k" if tsamp else "full"
         if not sweeps:
             print(json.dumps({
                 "op": f"ivfadc_build_k{k_coarse}_m{m}_kc{k_cells}_{tag}",
                 "n_corpus": n, "k_coarse": k_coarse,
-                "coarse_assign": coarse_assign, "pq_assign": pq_assign,
                 "train_sample": tsamp, "build_sec": build_sec,
                 "sec": build_sec,
             }))
@@ -328,8 +316,6 @@ def _ivfadc_focus(spark, corpus, queries, n: int, with_recall) -> None:
                     "k_cells": k_cells,
                     "n_probe": n_probe,
                     "candidates": cand,
-                    "coarse_assign": coarse_assign,
-                    "pq_assign": pq_assign,
                     "train_sample": tsamp,
                     "build_sec": build_sec,
                     "probe_sec": min(walls),
