@@ -16,6 +16,14 @@ flip-publication-marker dance, 00050:20-41, done on a lake), so a
 re-run publishes a NEW version and readers mid-query keep their
 pinned snapshot; old versions are retained for time travel/rollback.
 
+The returned counts (and the manifest's `rows`) are the rows THIS run
+wrote, observed during each write (`df.observe`), not a read-back of
+the table: a warm refresh runs its four writes and no re-reads. The
+backfill guard (an older run_date never demotes the served snapshot)
+reads the served version's `v=<n>/_AS_OF` marker, written right after
+each publish; a version without one (a lake from before markers, or a
+crash between publish and marker) falls back to a max(as_of) scan.
+
 `read_gold(spark, out_dir, table, as_of=...)` is the serving read:
 resolve the _LATEST pointer (or an explicit `version` for time
 travel) and REFUSE to serve stale data — `assert_fresh` on the
@@ -31,7 +39,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.snapshot import technical_snapshot
@@ -39,6 +47,8 @@ from .plans.technical import daily_adv_dec_ratio, pct_above_sma_breadth
 from .sources import load_table
 from .streaming.incremental import (
     RunManifest,
+    _read_small_file,
+    _write_small_file,
     assert_fresh,
     latest_version,
     merge_column_groups,
@@ -56,6 +66,35 @@ def _silver_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").withColumn(
         "day", F.expr("ts_us DIV 86400000000")
     )
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with its row count observed while an action (the write)
+    runs, so the count costs no second scan; read it as
+    `obs.get["rows"]` once the write has returned."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _as_of_marker(root: str, version: int) -> str:
+    """The file holding a published version's run date. Parquet readers
+    skip `_`-prefixed files, so it never shows up as data."""
+    return f"{root}/v={version}/_AS_OF"
+
+
+def _served_as_of(spark: SparkSession, root: str) -> dt.date | None:
+    """Publication date of the snapshot `_LATEST` serves, or None when
+    nothing is published yet. Reads that version's `_AS_OF` marker; a
+    version without one (a lake written before markers existed, or a
+    crash between the publish and the marker write) is scanned for
+    its max(as_of) instead."""
+    v = latest_version(spark, root)
+    if v is None:
+        return None
+    raw = _read_small_file(spark, _as_of_marker(root, v))
+    if raw is not None:
+        return dt.date.fromisoformat(raw.strip())
+    return read_published(spark, root, version=v).agg(F.max("as_of")).first()[0]
 
 
 def read_gold(
@@ -126,25 +165,26 @@ def run_daily_pipeline(
         # the rollback target after keep_versions consecutive
         # backfills (the r11 ADVICE bug; prune_versions now also
         # protects the _LATEST target as defense in depth).
-        prev_v = latest_version(spark, root)
-        prev_as_of = None
-        if prev_v is not None:
-            prev_as_of = (
-                read_published(spark, root, version=prev_v)
-                .agg(F.max("as_of"))
-                .first()[0]
-            )
-        flip = not (prev_as_of is not None and prev_as_of > run_as_of)
-        v = publish_version(df.withColumn("as_of", as_of_col), root, flip=flip)
-        return read_published(spark, root, version=v).count()
+        served = _served_as_of(spark, root)
+        flip = served is None or served <= run_as_of
+        df, obs = _counted(df.withColumn("as_of", as_of_col))
+        v = publish_version(df, root, flip=flip)
+        _write_small_file(spark, _as_of_marker(root, v), run_as_of.isoformat())
+        return obs.get["rows"]
+
+    silver_path = os.path.join(out_dir, "silver", "events")
+    silver_schema = None
 
     def silver():
-        df = _silver_events(spark, sf_dir)
-        write_partition_overwrite(df, os.path.join(out_dir, "silver", "events"), "day")
-        return spark.read.parquet(os.path.join(out_dir, "silver", "events")).count()
+        nonlocal silver_schema
+        df, obs = _counted(_silver_events(spark, sf_dir))
+        silver_schema = df.schema
+        write_partition_overwrite(df, silver_path, "day")
+        return obs.get["rows"]
 
     def snapshot():
-        ev = spark.read.parquet(os.path.join(out_dir, "silver", "events"))
+        # the schema just written: no parquet schema-inference job
+        ev = spark.read.schema(silver_schema).parquet(silver_path)
         return publish_gold(
             technical_snapshot(ev, "user_id", "ts_us", "value"), "snapshot"
         )

@@ -35,6 +35,15 @@ def get_spark(app_name: str = "jsdp-spark") -> SparkSession:
         # within noise on the narrow paths — guide §4.2's "lower for
         # wide rows" point measured.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
+        # generated-class cache (default 100 entries). Measured working
+        # sets with an unbounded cache at sf0.01 (perfbench, seed 405):
+        # one whole nightly_refresh run (set-up plus 3 refreshes)
+        # generates 157 distinct classes, one serving_reads run (21
+        # requests) 335. At 100, one refresh's classes evict each other
+        # and a warm refresh recompiles ~130 of them through Janino; at
+        # 1000 a warm refresh compiles ~6 (the ones that inline its
+        # as_of date literal).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -360,6 +360,20 @@ def _write_small_file(spark: SparkSession, path: str, content: str) -> None:
         out.close()
 
 
+def _flip_latest(spark: SparkSession, root: str, version: int) -> None:
+    """Point `_LATEST` at `version`: write a tmp marker, delete the old
+    one, rename. The only non-atomic instant is the missing-marker
+    window, which readers handle by falling back to the highest
+    complete version."""
+    marker, tmp = f"{root}/_LATEST", f"{root}/._LATEST.tmp"
+    _write_small_file(spark, tmp, str(version))
+    fs, mp = _hadoop_fs(spark, marker)
+    _, tp = _hadoop_fs(spark, tmp)
+    fs.delete(mp, False)
+    if not fs.rename(tp, mp):
+        raise IOError(f"_LATEST flip to v={version} failed for {root}")
+
+
 def publish_version(
     df: DataFrame, root: str, *, keep_versions: int = 3, flip: bool = True
 ) -> int:
@@ -367,9 +381,7 @@ def publish_version(
     (the reference writes chunks then flips a publication marker —
     00050:20-41; this is that dance done right on a lake): write the
     new snapshot to `root/v=<n>/`, then flip the tiny `_LATEST`
-    pointer (write tmp marker, delete old, rename — the only
-    non-atomic instant is a missing-marker window readers handle by
-    falling back to the highest complete version). Readers pinned to
+    pointer (`_flip_latest`). Readers pinned to
     an old version keep working until it is pruned; `keep_versions`
     old snapshots besides the newest are retained for time travel /
     rollback (delegated to `prune_versions`, which never deletes the
@@ -385,13 +397,7 @@ def publish_version(
     nxt = (versions[-1] + 1) if versions else 1
     df.write.mode("overwrite").parquet(f"{root}/v={nxt}")
     if flip:
-        marker, tmp = f"{root}/_LATEST", f"{root}/._LATEST.tmp"
-        _write_small_file(spark, tmp, str(nxt))
-        fs, mp = _hadoop_fs(spark, marker)
-        _, tp = _hadoop_fs(spark, tmp)
-        fs.delete(mp, False)
-        if not fs.rename(tp, mp):
-            raise IOError(f"publication flip failed for {root}")
+        _flip_latest(spark, root, nxt)
     prune_versions(spark, root, keep_last=keep_versions + 1)
     return nxt
 
@@ -439,7 +445,7 @@ def latest_version(spark: SparkSession, root: str) -> int | None:
     """The version the `_LATEST` pointer currently serves (falling
     back to the highest complete version mid-flip), or None when
     nothing is published yet — the pre-publish probe the backfill
-    guard in pipeline.publish_gold needs."""
+    guard in pipeline._served_as_of needs."""
     raw = _read_small_file(spark, f"{root}/_LATEST")
     if raw is not None:
         return int(raw.strip())
@@ -480,13 +486,7 @@ def rollback_to(spark: SparkSession, root: str, version: int) -> None:
     on disk for forensics until pruned)."""
     if version not in published_versions(spark, root):
         raise ValueError(f"version {version} not present under {root}")
-    marker, tmp = f"{root}/_LATEST", f"{root}/._LATEST.tmp"
-    _write_small_file(spark, tmp, str(version))
-    fs, mp = _hadoop_fs(spark, marker)
-    _, tp = _hadoop_fs(spark, tmp)
-    fs.delete(mp, False)
-    if not fs.rename(tp, mp):
-        raise IOError(f"rollback flip failed for {root}")
+    _flip_latest(spark, root, version)
 
 
 def snapshot_diff(

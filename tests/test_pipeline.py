@@ -12,6 +12,18 @@ from japanstockdatapipeline_spark.pipeline import run_daily_pipeline
 from japanstockdatapipeline_spark.sources import load_table
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """`fn()`'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_daily_pipeline_end_to_end(spark, sf_dir, tmp_path):
     import datetime as dt
 
@@ -27,9 +39,18 @@ def test_daily_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert counts["gold_snapshot"] == 15  # one row per user
     assert counts["gold_market_indicators"] > 0
     assert counts["gold_stock_screen"] == 150  # one screen row per customer
-    # idempotent re-run: same run_date republishes, counts unchanged
-    counts2 = run_daily_pipeline(spark, sf_dir, out_dir, "2026-08-13")
+    # idempotent re-run: same run_date republishes, counts unchanged.
+    # Job budget of a warm refresh: its writes, no read-backs. At
+    # sf0.001 on local[4] it runs 18 jobs; it ran 40 when every write
+    # was followed by a count() of the written table and the backfill
+    # guard scanned the served version for max(as_of).
+    counts2, jobs = _jobs_in_group(
+        spark,
+        "warm_refresh",
+        lambda: run_daily_pipeline(spark, sf_dir, out_dir, "2026-08-13"),
+    )
     assert counts2 == counts
+    assert jobs <= 18
     # manifest recorded 2 successful runs per job
     recs = [json.loads(line) for line in open(f"{out_dir}/ops/runs.jsonl")]
     assert sum(r.get("status") == "success" for r in recs) == 8
@@ -76,6 +97,54 @@ def test_daily_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert {r["as_of"] for r in backfill.select("as_of").distinct().collect()} == {
         dt.date(2026, 8, 12)
     }
+
+
+def test_served_as_of_reads_marker_with_scan_fallback(spark, tmp_path):
+    """The backfill guard's probe of the served snapshot's date: the
+    served version's `_AS_OF` marker, read with no Spark job, or a
+    max(as_of) scan of that version when it has no marker."""
+    import datetime as dt
+    import os
+
+    from japanstockdatapipeline_spark.pipeline import _as_of_marker, _served_as_of
+    from japanstockdatapipeline_spark.streaming.incremental import (
+        _write_small_file,
+        publish_version,
+        rollback_to,
+    )
+
+    root = str(tmp_path / "gold")
+
+    def publish(day: str, **kw) -> int:
+        df = spark.range(2).select(F.to_date(F.lit(day)).alias("as_of"))
+        v = publish_version(df, root, **kw)
+        _write_small_file(spark, _as_of_marker(root, v), day)
+        return v
+
+    assert _served_as_of(spark, root) is None  # nothing published
+
+    v1 = publish("2026-08-13")
+    served, jobs = _jobs_in_group(
+        spark, "served_as_of_marker", lambda: _served_as_of(spark, root)
+    )
+    assert (served, jobs) == (dt.date(2026, 8, 13), 0)
+
+    # a backfill published without a flip leaves the served date alone
+    publish("2026-08-10", flip=False)
+    assert _served_as_of(spark, root) == dt.date(2026, 8, 13)
+
+    publish("2026-08-14")
+    assert _served_as_of(spark, root) == dt.date(2026, 8, 14)
+    rollback_to(spark, root, v1)
+    assert _served_as_of(spark, root) == dt.date(2026, 8, 13)
+
+    # a version published before markers existed: scan its rows
+    os.remove(_as_of_marker(root, v1))
+    served, jobs = _jobs_in_group(
+        spark, "served_as_of_scan", lambda: _served_as_of(spark, root)
+    )
+    assert served == dt.date(2026, 8, 13)
+    assert jobs > 0
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
