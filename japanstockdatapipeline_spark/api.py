@@ -2,10 +2,14 @@
 views + a screener query API.
 
 The reference serves `analytics.stock_screen` through PostgREST with
-caller-pushed filter/sort/limit (00051:18-53); here the same contract
-is `spark.sql` over temp views — Catalyst pushes the filters into the
-scans, and the screener view composes the latest-per-key snapshot
-with the published aggregate exactly like J5.
+caller-pushed filter/sort/limit (00051:18-53) over a stored table, one
+row per stock; here the same contract is `spark.sql` over temp views.
+The screener view composes the latest-per-key snapshot with the
+published aggregate exactly like J5, and `register_views` materializes
+it once (`CACHE TABLE`, one row per customer), so each screen runs its
+filter/sort/limit over the cached rows in one Spark job. The cache
+holds the inputs as they were at registration: callers re-register
+after the inputs change.
 """
 
 from __future__ import annotations
@@ -18,7 +22,10 @@ __all__ = ["register_views", "screen"]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every base table and the derived `customer_screen` view."""
+    """Register every base table and the derived `customer_screen` view,
+    materialized now (eager `CACHE TABLE`, MEMORY_AND_DISK). Calling it
+    again replaces the view, and `CREATE OR REPLACE` uncaches the old
+    rows."""
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     spark.sql(
@@ -38,6 +45,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         FROM customer c LEFT JOIN latest l ON c.c_custkey = l.o_custkey
         """
     )
+    spark.sql("CACHE TABLE customer_screen")
 
 
 _ALLOWED_COLS = frozenset(
@@ -62,9 +70,11 @@ def screen(
     descending: bool = True,
     limit: int = 50,
 ) -> DataFrame:
-    """The screener read: filter/sort/limit pushed into the view —
-    the PostgREST query-param contract as a typed API (no raw SQL
-    injection: columns are allow-listed, values are parameterized)."""
+    """The screener read: filter/sort/limit over the `customer_screen`
+    rows `register_views` materialized — the PostgREST query-param
+    contract as a typed API (no raw SQL injection: columns are
+    allow-listed, values are parameterized). It serves the inputs as of
+    the last `register_views`; re-register after they change."""
     if order_by not in _ALLOWED_COLS:
         raise ValueError(f"order_by must be one of {sorted(_ALLOWED_COLS)}")
     df = spark.table("customer_screen")

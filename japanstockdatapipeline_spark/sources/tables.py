@@ -35,6 +35,11 @@ TABLE_NAMES = (
 # schema is a property of the (immutable per round) file, not the
 # session, so caching across sessions is safe; with a cached schema
 # `spark.read.schema(s).parquet(path)` builds job-free.
+# `streaming.incremental.read_published` reads each published version
+# `root/v=<n>` through this cache too. That is safe because version
+# directories are write-once: `publish_version` numbers each new
+# version past the highest present, and `prune_versions` always keeps
+# the highest, so a version number is never written twice.
 _SCHEMA_CACHE: dict = {}
 
 

@@ -20,6 +20,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import _read_parquet_cached
+
 __all__ = [
     "forward_fill_plan",
     "catch_up_plan",
@@ -43,6 +45,7 @@ __all__ = [
     "diff_versions",
     "RunManifest",
     "FreshnessError",
+    "check_fresh",
     "assert_fresh",
 ]
 
@@ -444,8 +447,7 @@ def published_versions(spark: SparkSession, root: str) -> list[int]:
 def latest_version(spark: SparkSession, root: str) -> int | None:
     """The version the `_LATEST` pointer currently serves (falling
     back to the highest complete version mid-flip), or None when
-    nothing is published yet — the pre-publish probe the backfill
-    guard in pipeline._served_as_of needs."""
+    nothing is published yet."""
     raw = _read_small_file(spark, f"{root}/_LATEST")
     if raw is not None:
         return int(raw.strip())
@@ -458,16 +460,13 @@ def read_published(
 ) -> DataFrame:
     """Resolve the `_LATEST` pointer (or an explicit `version` for
     time travel) and read that snapshot. If the marker is mid-flip
-    (missing), fall back to the highest version present."""
+    (missing), fall back to the highest version present. The version's
+    schema comes from the path-keyed schema cache, so only the first
+    read of a version runs Spark's schema-inference job."""
     if version is None:
-        raw = _read_small_file(spark, f"{root}/_LATEST")
-        if raw is not None:
-            version = int(raw.strip())
-        else:
-            versions = published_versions(spark, root)
-            if not versions:
-                raise FileNotFoundError(f"no published versions under {root}")
-            version = versions[-1]
+        version = latest_version(spark, root)
+        if version is None:
+            raise FileNotFoundError(f"no published versions under {root}")
     elif version not in published_versions(spark, root):
         # a pinned read of a PRUNED (or never-published) version must
         # fail loudly and deterministically, not with a generic
@@ -477,7 +476,7 @@ def read_published(
             f"version {version} not present under {root} (pruned or never"
             f" published); retained: {published_versions(spark, root)}"
         )
-    return spark.read.parquet(f"{root}/v={version}")
+    return _read_parquet_cached(spark, f"{root}/v={version}")
 
 
 def rollback_to(spark: SparkSession, root: str, version: int) -> None:
@@ -646,20 +645,37 @@ class FreshnessError(RuntimeError):
     pass
 
 
-def assert_fresh(
-    df: DataFrame, date_col: str, *, as_of: dt.date, max_staleness_days: int = 5
+def check_fresh(
+    max_date: dt.date | dt.datetime | None,
+    *,
+    as_of: dt.date,
+    max_staleness_days: int,
+    what: str,
 ) -> None:
     """ST9 stale guard (00117:230-247): refuse to serve precomputed
-    data older than the staleness budget — error, never silently stale."""
-    mx = df.agg(F.max(date_col)).first()[0]
-    if mx is None:
-        raise FreshnessError(f"no data in {date_col}")
-    mxd = mx.date() if isinstance(mx, dt.datetime) else mx
+    data older than the staleness budget — error, never silently stale.
+    `max_date` is the newest `what` date of the data (None: no rows);
+    data exactly `max_staleness_days` old is still served."""
+    if max_date is None:
+        raise FreshnessError(f"no data in {what}")
+    mxd = max_date.date() if isinstance(max_date, dt.datetime) else max_date
     age = (as_of - mxd).days
     if age > max_staleness_days:
         raise FreshnessError(
-            f"stale: max({date_col})={mxd} is {age}d old (budget {max_staleness_days}d)"
+            f"stale: max({what})={mxd} is {age}d old (budget {max_staleness_days}d)"
         )
+
+
+def assert_fresh(
+    df: DataFrame, date_col: str, *, as_of: dt.date, max_staleness_days: int = 5
+) -> None:
+    """`check_fresh` on `df`'s max(`date_col`), found by a scan."""
+    check_fresh(
+        df.agg(F.max(date_col)).first()[0],
+        as_of=as_of,
+        max_staleness_days=max_staleness_days,
+        what=date_col,
+    )
 
 
 class RunManifest:

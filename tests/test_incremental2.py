@@ -363,6 +363,41 @@ def test_prune_versions_never_deletes_serving_or_protected(spark, tmp_path):
         prune_versions(spark, root, keep_last=0)
 
 
+def test_read_published_schema_is_per_version(spark, tmp_path):
+    """read_published takes each version's schema from the path-keyed
+    schema cache. Each version keeps its own columns across prune and
+    rollback, and the next publish numbers past the highest version
+    present, so a cached schema never describes another version."""
+    from japanstockdatapipeline_spark.streaming.incremental import (
+        prune_versions,
+        publish_version,
+        read_published,
+        rollback_to,
+    )
+
+    root = str(tmp_path / "gold")
+    as_of = F.to_date(F.lit("2026-08-13")).alias("as_of")
+    a = F.col("id").alias("a")
+    assert publish_version(spark.range(3).select(as_of, a), root) == 1
+    assert publish_version(spark.range(3).select(as_of, a, F.lit(7).alias("b")), root) == 2
+    cols = {1: ["as_of", "a"], 2: ["as_of", "a", "b"]}
+    assert {v: read_published(spark, root, version=v).columns for v in cols} == cols
+
+    rollback_to(spark, root, 1)
+    # keeps the highest version (2) and the served one (1)
+    assert prune_versions(spark, root, keep_last=1) == []
+    assert {v: read_published(spark, root, version=v).columns for v in cols} == cols
+    assert read_published(spark, root).columns == cols[1]
+    assert [r["b"] for r in read_published(spark, root, version=2).collect()] == [7] * 3
+
+    v3 = publish_version(
+        spark.range(2).select(as_of, F.lit("x").alias("c")), root, flip=False
+    )
+    assert v3 == 3
+    assert read_published(spark, root, version=v3).columns == ["as_of", "c"]
+    assert read_published(spark, root).columns == cols[1]
+
+
 def test_write_with_audit_empty_frame_observes_zero(spark, tmp_path):
     """r11 ADVICE (low): F.sum over an empty frame observes NULL; the
     audit must coalesce to 0 instead of failing the (empty-replay)

@@ -26,10 +26,12 @@ def _jobs_in_group(spark, group: str, fn):
 
 def test_daily_pipeline_end_to_end(spark, sf_dir, tmp_path):
     import datetime as dt
+    import os
 
-    from japanstockdatapipeline_spark.pipeline import read_gold
+    from japanstockdatapipeline_spark.pipeline import _as_of_marker, read_gold
     from japanstockdatapipeline_spark.streaming.incremental import (
         FreshnessError,
+        latest_version,
         published_versions,
     )
 
@@ -62,13 +64,35 @@ def test_daily_pipeline_end_to_end(spark, sf_dir, tmp_path):
         spark, out_dir, "market_indicators", as_of=dt.date(2026, 8, 14)
     )
     assert {"adv_dec_ratio_25d", "pct_above_sma20"} <= set(wide.columns)
+    # job budget of a serving read of a version already read once: one
+    # job, the collect (the schema comes from the schema cache, the
+    # date from the version's _AS_OF marker). It ran 4 when every read
+    # inferred the version's schema and scanned it for max(as_of).
+    rows, jobs = _jobs_in_group(
+        spark,
+        "gold_read",
+        lambda: read_gold(
+            spark, out_dir, "market_indicators", as_of=dt.date(2026, 8, 14)
+        )
+        .filter(F.col("as_of") == dt.date(2026, 8, 13))
+        .collect(),
+    )
+    assert (len(rows), jobs) == (counts["gold_market_indicators"], 1)
     # time travel: the first publication is still readable by version
     v1 = read_gold(
         spark, out_dir, "snapshot", as_of=dt.date(2026, 8, 14), version=1
     )
     assert v1.count() == counts["gold_snapshot"]
     # the STALE path errors instead of serving (error-don't-serve-stale):
-    # a reader 30 days later must refuse the 2026-08-13 snapshot
+    # a reader 30 days later must refuse the 2026-08-13 snapshot, whose
+    # date comes from its _AS_OF marker...
+    snapshot_root = f"{out_dir}/gold/snapshot"
+    marker = _as_of_marker(snapshot_root, latest_version(spark, snapshot_root))
+    assert os.path.exists(marker)
+    with pytest.raises(FreshnessError):
+        read_gold(spark, out_dir, "snapshot", as_of=dt.date(2026, 9, 13))
+    # ...or, without the marker, from the max(as_of) scan fallback
+    os.remove(marker)
     with pytest.raises(FreshnessError):
         read_gold(spark, out_dir, "snapshot", as_of=dt.date(2026, 9, 13))
     # ...but an explicitly PINNED version is a time-travel read of a
@@ -147,6 +171,30 @@ def test_served_as_of_reads_marker_with_scan_fallback(spark, tmp_path):
     assert jobs > 0
 
 
+def test_empty_gold_publish_is_never_served(spark, tmp_path):
+    """An empty publish writes no _AS_OF marker (there is no max(as_of)
+    to state), so the read path still finds no date and refuses it."""
+    import datetime as dt
+    import os
+
+    from japanstockdatapipeline_spark.pipeline import (
+        _as_of_marker,
+        _publish_gold,
+        _served_as_of,
+        read_gold,
+    )
+    from japanstockdatapipeline_spark.streaming.incremental import FreshnessError
+
+    out_dir = str(tmp_path / "lake")
+    root = f"{out_dir}/gold/snapshot"
+    empty = spark.range(3).filter("id < 0").selectExpr("id AS key")
+    assert _publish_gold(empty, root, "2026-08-13") == 0
+    assert not os.path.exists(_as_of_marker(root, 1))
+    assert _served_as_of(spark, root) is None
+    with pytest.raises(FreshnessError, match="no data in as_of"):
+        read_gold(spark, out_dir, "snapshot", as_of=dt.date(2026, 8, 13))
+
+
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -169,14 +217,52 @@ def test_screener_api(spark, sf_dir):
     from japanstockdatapipeline_spark.api import register_views, screen
 
     register_views(spark, sf_dir)
-    top = screen(spark, segment="BUILDING", min_acctbal=0, limit=10)
-    rows = top.collect()
+    # the view is materialized at registration, so a screen runs one
+    # job over the cached rows. It ran 3 when every call re-ran the
+    # view's orders scan, row_number() window and join.
+    rows, jobs = _jobs_in_group(
+        spark,
+        "screen",
+        lambda: screen(spark, segment="BUILDING", min_acctbal=0, limit=10).collect(),
+    )
+    assert jobs == 1
     assert 0 < len(rows) <= 10
     assert all(r["c_mktsegment"] == "BUILDING" and r["c_acctbal"] >= 0 for r in rows)
     prices = [r["latest_price"] for r in rows if r["latest_price"] is not None]
     assert prices == sorted(prices, reverse=True)
     with pytest.raises(ValueError):
         screen(spark, order_by="1; DROP TABLE x")
+
+
+def test_screener_reregistration_replaces_cached_view(spark, sf_dir, tmp_path):
+    """Registering again over changed inputs replaces the materialized
+    view: one cached relation, serving only the new inputs' rows."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from japanstockdatapipeline_spark.api import register_views, screen
+    from japanstockdatapipeline_spark.sources import TABLE_NAMES
+
+    new_dir = tmp_path / "sf"
+    new_dir.mkdir()
+    for name in TABLE_NAMES:
+        shutil.copy(f"{sf_dir}/{name}.parquet", new_dir / f"{name}.parquet")
+    customer = pq.read_table(f"{sf_dir}/customer.parquet")
+    one = customer.filter(pc.equal(customer["c_mktsegment"], "BUILDING"))
+    pq.write_table(one, new_dir / "customer.parquet")
+
+    spark.catalog.dropTempView("customer_screen")  # uncaches it
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    register_views(spark, sf_dir)
+    register_views(spark, str(new_dir))
+    assert spark.catalog.isCached("customer_screen")
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted + 1
+    rows = screen(spark, limit=1000).collect()
+    assert sorted(r["c_custkey"] for r in rows) == sorted(
+        one.column("c_custkey").to_pylist()
+    )
 
 
 def test_lsh_recall_vs_brute_force(spark, sf_dir):

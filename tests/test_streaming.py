@@ -15,6 +15,7 @@ from japanstockdatapipeline_spark.streaming.incremental import (
     RunManifest,
     assert_fresh,
     catch_up_plan,
+    check_fresh,
     forward_fill_plan,
     prune_retention,
     write_partition_overwrite,
@@ -68,6 +69,13 @@ def test_freshness_guard(spark):
     assert_fresh(df, "d", as_of=D(2026, 8, 4), max_staleness_days=5)
     with pytest.raises(FreshnessError):
         assert_fresh(df, "d", as_of=D(2026, 8, 20), max_staleness_days=5)
+    # the boundary: data exactly the budget old is served, a day more is not
+    assert_fresh(df, "d", as_of=D(2026, 8, 6), max_staleness_days=5)
+    with pytest.raises(FreshnessError, match="is 6d old"):
+        check_fresh(D(2026, 8, 1), as_of=D(2026, 8, 7), max_staleness_days=5, what="d")
+    # no rows, no date: never served
+    with pytest.raises(FreshnessError, match="no data in d"):
+        check_fresh(None, as_of=D(2026, 8, 4), max_staleness_days=5, what="d")
 
 
 def test_run_manifest_idempotency(tmp_path):
