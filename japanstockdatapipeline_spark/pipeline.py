@@ -6,9 +6,9 @@ publication, wrapped in a run manifest) plus the SERVING read path.
   1. silver: events normalized (ts_us, day) — partitioned by day,
      dynamic partition overwrite (idempotent re-runs, ST1 overlap)
   2. gold: per-user technical snapshot (grouped-map)
-  3. gold: market breadth (A/D ratio + %-above-SMA merged into one
-     wide indicators table via the NULL-cursor merge, ST4)
-  4. gold: the §7.1 stock-metrics screen
+  3. gold: market breadth (A/D ratio + %-above-SMA), one wide
+     indicators table built in one pass over events (`market_breadth`)
+  4. gold: the §7.1 stock-metrics screen, one pass over orders
 with every step logged to the RunManifest (ST7). Gold tables are
 PUBLISHED via `publish_version` (ST5 whole-snapshot atomicity: write
 v=<n>, flip the _LATEST pointer — the reference's write-chunks-then-
@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.snapshot import technical_snapshot
-from .plans.technical import daily_adv_dec_ratio, pct_above_sma_breadth
+from .plans.technical import market_breadth
 from .sources import load_table
 from .streaming.incremental import (
     RunManifest,
@@ -56,7 +56,6 @@ from .streaming.incremental import (
     _write_small_file,
     check_fresh,
     latest_version,
-    merge_column_groups,
     publish_version,
     read_published,
     write_partition_overwrite,
@@ -214,9 +213,7 @@ def run_daily_pipeline(
         )
 
     def indicators():
-        adv = daily_adv_dec_ratio(spark, sf_dir)
-        sma = pct_above_sma_breadth(spark, sf_dir)
-        return publish_gold(merge_column_groups(adv, sma, ["day"]), "market_indicators")
+        return publish_gold(market_breadth(spark, sf_dir), "market_indicators")
 
     def metrics_screen():
         # §7.1 slice: rebase -> momentum pivot -> FY/prev-FY -> sector

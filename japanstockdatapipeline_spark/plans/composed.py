@@ -535,7 +535,9 @@ def multi_basket_valuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one-scan pivot (the reference's >120s -> 23.4s rewrite); yoy via "
     "FY rank pivot; percent_rank partitions exclude NULL metrics from "
     "the rank axis (00049 FILTER semantics); total score = null-aware "
-    "row-wise mean. One shuffle per stage, dims broadcast.",
+    "row-wise mean. One orders shuffle (on o_custkey: every order "
+    "window and the per-customer pivot ride it), the per-customer "
+    "pivot broadcast to the customer scan, one shuffle on segment.",
     oracle="""
     WITH adj AS (
       SELECT o_custkey, o_orderkey, o_orderdate,
@@ -608,47 +610,56 @@ def multi_basket_valuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stock_metrics_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders").withColumn("__fy", F.year("o_orderdate"))
     c = load_table(spark, sf_dir, "customer")
 
+    # every window below is partitioned by o_custkey, so one exchange
+    # of orders serves them and the per-customer groupBy; ordering by
+    # FY first leaves the order rows in date order (the FY is the
+    # date's year) and lets the FY windows reuse the same sort
+    wcust = Window.partitionBy("o_custkey")
+    wfy = wcust.orderBy(F.col("__fy").desc())
+    wdesc = wcust.orderBy(
+        F.col("__fy").desc(), F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
+    )
     # rebase (ST8/W6): suffix adjustment over strictly-later orders;
     # factors are {1, 2} so the product collapses to the exact closed
     # form 2^count — no float fold, no exactness caveat
-    wdesc = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
     later_urgent = F.count(
         F.when(F.col("o_orderpriority") == "1-URGENT", 1)
     ).over(wdesc.rowsBetween(Window.unboundedPreceding, -1))
-    adj = o.withColumn("adj_price", F.col("o_totalprice") * F.pow(F.lit(2.0), later_urgent))
-
-    # momentum: one-scan conditional-agg pivot over rank offsets
-    ranked = adj.withColumn("rn", F.row_number().over(wdesc))
-    px = ranked.groupBy("o_custkey").agg(
-        F.max(F.when(F.col("rn") == 1, F.col("adj_price"))).alias("p1"),
-        F.max(F.when(F.col("rn") == 4, F.col("adj_price"))).alias("p4"),
-        F.max(F.when(F.col("rn") == 8, F.col("adj_price"))).alias("p8"),
+    ranked = o.select(
+        "o_custkey",
+        "o_totalprice",
+        "__fy",
+        (F.col("o_totalprice") * F.pow(F.lit(2.0), later_urgent)).alias("adj_price"),
+        F.row_number().over(wdesc).alias("rn"),
+    )
+    # FY revenue on each of the year's order rows (its peer group on
+    # the FY axis) and the year's rank, newest first
+    fy = ranked.select(
+        "*",
+        F.sum("o_totalprice")
+        .over(wfy.rangeBetween(Window.currentRow, Window.currentRow))
+        .alias("rev_y"),
+        F.dense_rank().over(wfy).alias("rn_fy"),
     )
 
-    # FY / prev-FY via rank pivot on yearly revenue
-    fy = o.groupBy("o_custkey", F.year("o_orderdate").alias("fy")).agg(
-        F.sum("o_totalprice").alias("rev")
-    )
-    wfy = Window.partitionBy("o_custkey").orderBy(F.col("fy").desc())
-    fyp = (
-        fy.withColumn("rn_fy", F.row_number().over(wfy))
-        .groupBy("o_custkey")
-        .agg(
-            F.max(F.when(F.col("rn_fy") == 1, F.col("rev"))).alias("rev1"),
-            F.max(F.when(F.col("rn_fy") == 2, F.col("rev"))).alias("rev2"),
-        )
+    # momentum over rank offsets and FY / prev-FY revenue: one
+    # conditional-agg pivot per customer
+    def pick(rank, k, value):
+        return F.max(F.when(F.col(rank) == k, F.col(value)))
+
+    per_cust = fy.groupBy("o_custkey").agg(
+        pick("rn", 1, "adj_price").alias("p1"),
+        pick("rn", 4, "adj_price").alias("p4"),
+        pick("rn", 8, "adj_price").alias("p8"),
+        pick("rn_fy", 1, "rev_y").alias("rev1"),
+        pick("rn_fy", 2, "rev_y").alias("rev2"),
     )
 
     base = (
-        c.join(px, c.c_custkey == px.o_custkey, "left")
-        .drop(px.o_custkey)
-        .join(fyp, c.c_custkey == fyp.o_custkey, "left")
-        .drop(fyp.o_custkey)
+        c.join(per_cust, c.c_custkey == per_cust.o_custkey, "left")
         .select(
             "c_custkey",
             F.col("c_mktsegment").alias("segment"),

@@ -2681,7 +2681,11 @@ def corpus_prep_fused(docs: DataFrame) -> DataFrame:
         # the 36.6k-gram broadcast array (size() of the distinct
         # intersect is symmetric in its arguments, so the value is
         # identical; measured 1.03 s -> 0.29 s for the decon stage at
-        # sf0.1, oracle re-verified).
+        # sf0.1, oracle re-verified). array_intersect(__eval_grams,
+        # __ghs) is fast only because of that Spark-internal build
+        # side, not an API contract: the values do not depend on the
+        # argument order, so a Spark that builds from the first
+        # argument would change only the speed.
         n_shared = F.when(
             is_train,
             F.size(F.array_intersect("__eval_grams", "__ghs")).cast("bigint"),

@@ -228,7 +228,8 @@ def event_golden_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="W19 rolling 25-day advance/decline ratio on the canonical day "
     "axis with completeness guard (market-breadth.ts:283-299): per-user "
     "daily close vs previous day, per-day adv/dec counts, 25-complete-"
-    "day rolling ratio.",
+    "day rolling ratio. The days of market_breadth that have adv/dec "
+    "counts.",
     oracle="""
     WITH r AS (
       SELECT user_id, epoch_us(ts) // 86400000000 AS day, value,
@@ -256,31 +257,8 @@ def event_golden_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def daily_adv_dec_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _ev(spark, sf_dir).withColumn("day", F.expr(f"ts_us DIV {US_PER_DAY}"))
-    # daily close = value of the last event of the (user, day)
-    closes = (
-        ev.groupBy("user_id", "day")
-        .agg(F.max_by("value", F.struct("ts_us", "event_id")).alias("close"))
-    )
-    wday = Window.partitionBy("user_id").orderBy("day")
-    delta = closes.withColumn("prev_close", F.lag("close").over(wday)).filter(
-        F.col("prev_close").isNotNull()
-    )
-    daily = delta.groupBy("day").agg(
-        F.sum(F.when(F.col("close") > F.col("prev_close"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("advancers"),
-        F.sum(F.when(F.col("close") < F.col("prev_close"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("decliners"),
-    )
-    w25 = Window.orderBy("day").rowsBetween(-24, 0)
-    ratio = F.when(
-        (F.count(F.lit(1)).over(w25) == 25) & (F.sum("decliners").over(w25) > 0),
-        100.0 * F.sum("advancers").over(w25) / F.sum("decliners").over(w25),
-    )
-    return daily.select(
-        "day", "advancers", "decliners", F.round(ratio, 6).alias("adv_dec_ratio_25d")
+    return market_breadth(spark, sf_dir).where(F.col("advancers").isNotNull()).select(
+        "day", "advancers", "decliners", "adv_dec_ratio_25d"
     )
 
 
@@ -289,7 +267,8 @@ def daily_adv_dec_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="W21 %-above-SMA breadth (market-breadth.ts:100-212): per-user "
     "SMA20 (full-window gated), then per-day fraction of qualifying "
     "users above their SMA; denominator excludes users without a full "
-    "window (excluded, not zeroed — SURVEY §7.3 null-semantics).",
+    "window (excluded, not zeroed — SURVEY §7.3 null-semantics). "
+    "market_breadth's %-above-SMA columns.",
     oracle="""
     WITH s AS (
       SELECT user_id, epoch_us(ts) // 86400000000 AS day, epoch_us(ts) AS tu, event_id, value,
@@ -313,16 +292,43 @@ def daily_adv_dec_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pct_above_sma_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return market_breadth(spark, sf_dir).select("day", "n_qualified", "pct_above_sma20")
+
+
+def market_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The gold market-indicators table: daily_adv_dec_ratio's and
+    pct_above_sma_breadth's columns on every event day, in one pass over
+    events. One exchange on user_id serves the SMA20 window, the
+    end-of-day aggregate and the previous-close lag; one groupBy("day")
+    yields both breadth families. Days on which no user has a previous
+    close keep NULL advance/decline columns, and the 25-day ratio counts
+    only the days that have them."""
     ev = _ev(spark, sf_dir).withColumn("day", F.expr(f"ts_us DIV {US_PER_DAY}"))
     w20 = Window.partitionBy("user_id").orderBy("ts_us", "event_id").rowsBetween(-19, 0)
     s = ev.withColumn(
         "sma20", F.when(F.count(F.lit(1)).over(w20) == 20, F.avg("value").over(w20))
     )
+    # daily close = value of the last event of the (user, day)
+    last = F.struct("ts_us", "event_id")
     eod = s.groupBy("user_id", "day").agg(
-        F.max_by("value", F.struct("ts_us", "event_id")).alias("close"),
-        F.max_by("sma20", F.struct("ts_us", "event_id")).alias("sma20"),
+        F.max_by("value", last).alias("close"),
+        F.max_by("sma20", last).alias("sma20"),
     )
-    return eod.groupBy("day").agg(
+    delta = eod.withColumn(
+        "prev_close", F.lag("close").over(Window.partitionBy("user_id").orderBy("day"))
+    )
+
+    close, prev = F.col("close"), F.col("prev_close")
+
+    def movers(moved):
+        # NULL, not 0, on a day without any previous close
+        return F.when(
+            F.count(prev) > 0, F.sum(F.when(moved, 1).otherwise(0))
+        ).cast("bigint")
+
+    daily = delta.groupBy("day").agg(
+        movers(close > prev).alias("advancers"),
+        movers(close < prev).alias("decliners"),
         F.count("sma20").cast("bigint").alias("n_qualified"),
         F.round(
             F.when(
@@ -332,6 +338,22 @@ def pct_above_sma_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         ).alias("pct_above_sma20"),
+    )
+    # the days with advance/decline rows sort first, in day order, so
+    # the 24 rows before each of them are its 24 previous such days
+    has_ad = F.col("advancers").isNotNull()
+    w25 = Window.orderBy(~has_ad, "day").rowsBetween(-24, 0)
+    ratio = F.when(
+        has_ad & (F.count(F.lit(1)).over(w25) == 25) & (F.sum("decliners").over(w25) > 0),
+        100.0 * F.sum("advancers").over(w25) / F.sum("decliners").over(w25),
+    )
+    return daily.select(
+        "day",
+        "advancers",
+        "decliners",
+        F.round(ratio, 6).alias("adv_dec_ratio_25d"),
+        "n_qualified",
+        "pct_above_sma20",
     )
 
 

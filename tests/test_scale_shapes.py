@@ -223,6 +223,38 @@ def test_vocab_stats_single_corpus_scan(spark):
     assert not re.search(r"\(\d+\) Window\b", plan), "vocab-axis window is back"
 
 
+def _final_plan(df) -> str:
+    """`df`'s executed physical plan after a collect: AQE's final plan,
+    without the initial plan it also prints."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_gold_plans_shuffle_their_fact_table_once(spark, sf_dir):
+    """The nightly gold tables each read their fact table once:
+    market_breadth is one scan of events and no join (it replaced a
+    full outer join of two plans that each scanned and shuffled events);
+    the stock screen is one scan of orders and one shuffle on o_custkey
+    that every order window and the per-customer pivot share."""
+    import re
+
+    from japanstockdatapipeline_spark.plans.composed import stock_metrics_pipeline
+    from japanstockdatapipeline_spark.plans.technical import market_breadth
+
+    def count(pattern, plan):
+        return len(re.findall(pattern, plan))
+
+    breadth = _final_plan(market_breadth(spark, sf_dir))
+    assert count(r"FileScan parquet \[[^\]]*\buser_id#", breadth) == 1
+    assert "Join" not in breadth
+    assert count(r"Exchange hashpartitioning\(user_id#", breadth) == 1
+
+    screen = _final_plan(stock_metrics_pipeline(spark, sf_dir))
+    assert count(r"FileScan parquet \[[^\]]*\bo_custkey#", screen) == 1
+    assert count(r"Exchange hashpartitioning\(o_custkey#", screen) == 1
+
+
 def test_explain_audit_checks_hold(spark):
     """The full physical-plan audit (tools/explain_audit.py CHECKS)
     must hold at sf0.001 — pushdown, broadcast-vs-SMJ choices,
