@@ -9,12 +9,31 @@ publication, wrapped in a run manifest) plus the SERVING read path.
   3. gold: market breadth (A/D ratio + %-above-SMA), one wide
      indicators table built in one pass over events (`market_breadth`)
   4. gold: the §7.1 stock-metrics screen, one pass over orders
-with every step logged to the RunManifest (ST7). Gold tables are
-PUBLISHED via `publish_version` (ST5 whole-snapshot atomicity: write
-v=<n>, flip the _LATEST pointer — the reference's write-chunks-then-
-flip-publication-marker dance, 00050:20-41, done on a lake), so a
-re-run publishes a NEW version and readers mid-query keep their
-pinned snapshot; old versions are retained for time travel/rollback.
+with every step logged to the RunManifest (ST7).
+
+The steps form a DAG of three chains, each run on its own
+`InheritableThread` and all joined before the call returns:
+silver_events → gold_snapshot (the snapshot reads the silver table),
+gold_market_indicators (reads raw events) and gold_stock_screen (reads
+orders and customer). Only the snapshot waits for another step. Each
+stage of a refresh is one task, so the chains' jobs share the cores
+instead of queueing behind each other. The threads inherit the
+caller's local properties, so a job group set by the caller still sees
+every job the steps run; the steps set none of their own. A failed step
+is recorded `failed` and the rest of its chain does not start (a
+failed silver means no snapshot step at all); the other chains run to
+completion and publish. After the join the exception of the first
+failed step, in step order, is raised again. The returned counts are
+in step order.
+
+Gold tables are PUBLISHED via `publish_version` (ST5 whole-snapshot
+atomicity: write v=<n>, flip the _LATEST pointer — the reference's
+write-chunks-then-flip-publication-marker dance, 00050:20-41, done on
+a lake), so a re-run publishes a NEW version and readers mid-query
+keep their pinned snapshot; old versions are retained for time
+travel/rollback. Every publish is atomic per table and the backfill
+guard is per table, so the chains need no coordination beyond the
+manifest's append lock.
 
 The returned counts (and the manifest's `rows`) are the rows THIS run
 wrote, observed during each write (`df.observe`), not a read-back of
@@ -44,6 +63,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -181,16 +201,21 @@ def run_daily_pipeline(
 ) -> dict[str, int]:
     manifest = RunManifest(os.path.join(out_dir, "ops", "runs.jsonl"))
     counts: dict[str, int] = {}
+    errors: dict[str, BaseException] = {}
 
-    def step(job: str, fn):
-        run_id = manifest.start(job, run_date)
-        try:
-            n = fn()
+    def run_chain(chain):
+        # a failed step ends its chain: the steps after it read what it
+        # would have written
+        for job, fn in chain:
+            run_id = manifest.start(job, run_date)
+            try:
+                n = fn()
+            except BaseException as e:  # noqa: BLE001 — raised again after the join
+                manifest.finish(run_id, "failed", error=str(e))
+                errors[job] = e
+                return
             manifest.finish(run_id, "success", rows=n)
             counts[job] = n
-        except Exception as e:  # noqa: BLE001 — manifest must record failures
-            manifest.finish(run_id, "failed", error=str(e))
-            raise
 
     def publish_gold(df: DataFrame, table: str) -> int:
         return _publish_gold(df, os.path.join(out_dir, "gold", table), run_date)
@@ -222,8 +247,18 @@ def run_daily_pipeline(
 
         return publish_gold(stock_metrics_pipeline(spark, sf_dir), "stock_screen")
 
-    step("silver_events", silver)
-    step("gold_snapshot", snapshot)
-    step("gold_market_indicators", indicators)
-    step("gold_stock_screen", metrics_screen)
-    return counts
+    chains = (
+        (("silver_events", silver), ("gold_snapshot", snapshot)),
+        (("gold_market_indicators", indicators),),
+        (("gold_stock_screen", metrics_screen),),
+    )
+    threads = [InheritableThread(run_chain, args=(c,)) for c in chains]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    steps = [job for chain in chains for job, _ in chain]
+    for job in steps:
+        if job in errors:
+            raise errors[job]
+    return {job: counts[job] for job in steps}

@@ -12,6 +12,8 @@ API is the same (`spark.read.parquet(dir)` + partition pruning).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,15 +43,29 @@ TABLE_NAMES = (
 # version past the highest present, and `prune_versions` always keeps
 # the highest, so a version number is never written twice.
 _SCHEMA_CACHE: dict = {}
+# One lock per path, so loads of the same table from concurrent threads
+# (the pipeline's silver and indicators steps both load events) run one
+# schema-inference job between them instead of one each.
+_SCHEMA_LOCKS: dict = {}
+
+# Serializes the TIMESTAMP(NANOS) fallback of `_load_events`, which sets
+# and restores a session-wide conf: two interleaved fallbacks could
+# unset the flag under each other, or restore it to the other's "true"
+# and leave it set for the rest of the session.
+_NANOS_FLAG_LOCK = threading.Lock()
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     s = _SCHEMA_CACHE.get(path)
     if s is not None:
         return spark.read.schema(s).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[path] = df.schema
-    return df
+    with _SCHEMA_LOCKS.setdefault(path, threading.Lock()):
+        s = _SCHEMA_CACHE.get(path)
+        if s is not None:
+            return spark.read.schema(s).parquet(path)
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[path] = df.schema
+        return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -84,17 +100,18 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
         # only valid while the legacy flag is in effect)
         # Likely TIMESTAMP(NANOS); retry with the legacy flag, scoped so
         # the session-wide setting is not mutated as a load side effect.
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            df = spark.read.parquet(path)
-            # Force schema resolution while the flag is active.
-            df.schema
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+        with _NANOS_FLAG_LOCK:
+            prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            try:
+                df = spark.read.parquet(path)
+                # Force schema resolution while the flag is active.
+                df.schema
+            finally:
+                if prev is None:
+                    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+                else:
+                    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     ts_type = dict(df.dtypes).get("ts", "")
     if ts_type in ("bigint", "long"):
         ts_us = F.expr("ts DIV 1000")

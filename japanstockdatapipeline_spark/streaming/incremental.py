@@ -14,6 +14,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import threading
 import time
 import uuid
 
@@ -55,8 +56,10 @@ def _hadoop_fs(spark: SparkSession, path: str):
     local paths, HDFS, and object stores (s3a://, gs://, abfs://)
     through the same interface, so partition maintenance is not tied
     to a POSIX filesystem."""
-    jvm = spark._jvm  # noqa: SLF001
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    # JVM classes are looked up by their full name, one py4j round trip;
+    # `spark._jvm.org.apache...` resolves one package at a time, each a
+    # failed class lookup in the JVM
+    hpath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)  # noqa: SLF001
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
     return fs, hpath
 
@@ -188,7 +191,7 @@ def clear_batch_partitions(
         else f"{root}/ingest_batch={int(batch_id)}"
     )
     fs, _ = _hadoop_fs(spark, root)
-    glob_p = spark._jvm.org.apache.hadoop.fs.Path(pattern)  # noqa: SLF001
+    glob_p = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(pattern)  # noqa: SLF001
     for st in fs.globStatus(glob_p) or []:
         fs.delete(st.getPath(), True)
 
@@ -347,9 +350,8 @@ def _read_small_file(spark: SparkSession, path: str) -> str | None:
         return None
     stream = fs.open(p)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(  # noqa: SLF001
-            stream, "UTF-8"
-        )
+        io_utils = getattr(spark._jvm, "org.apache.commons.io.IOUtils")  # noqa: SLF001
+        return io_utils.toString(stream, "UTF-8")
     finally:
         stream.close()
 
@@ -695,11 +697,15 @@ class RunManifest:
     raising callback is caught and recorded, never propagated — a
     broken notifier must not fail the pipeline (the reference wraps
     sendJobFailureEmail in its own try/catch for the same reason).
+
+    Appends are serialized by a lock, so steps running on concurrent
+    threads (the daily pipeline's chains) never interleave a record.
     """
 
     def __init__(self, path: str, *, on_failure=None):
         self.path = path
         self.on_failure = on_failure
+        self._lock = threading.Lock()
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def start(self, job: str, target_date: str) -> str:
@@ -796,5 +802,6 @@ class RunManifest:
         return set(done)
 
     def _append(self, rec: dict) -> None:
-        with open(self.path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+        line = json.dumps(rec) + "\n"
+        with self._lock, open(self.path, "a") as f:
+            f.write(line)

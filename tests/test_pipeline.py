@@ -55,7 +55,15 @@ def test_daily_pipeline_end_to_end(spark, sf_dir, tmp_path):
         lambda: run_daily_pipeline(spark, sf_dir, out_dir, "2026-08-13"),
     )
     assert counts2 == counts
-    assert jobs <= 11
+    assert list(counts2) == [
+        "silver_events",
+        "gold_snapshot",
+        "gold_market_indicators",
+        "gold_stock_screen",
+    ]
+    # the steps run on threads that inherit the caller's job group, so
+    # the group sees every job, at least the four writes
+    assert 4 <= jobs <= 11
     # manifest recorded 2 successful runs per job
     recs = [json.loads(line) for line in open(f"{out_dir}/ops/runs.jsonl")]
     assert sum(r.get("status") == "success" for r in recs) == 8
@@ -276,6 +284,216 @@ def test_empty_gold_publish_is_never_served(spark, tmp_path):
     assert _served_as_of(spark, root) is None
     with pytest.raises(FreshnessError, match="no data in as_of"):
         read_gold(spark, out_dir, "snapshot", as_of=dt.date(2026, 8, 13))
+
+
+def _step_statuses(out_dir: str, run_date: str) -> dict[str, str]:
+    """{job: final status} of the manifest's steps for `run_date`."""
+    recs = [json.loads(line) for line in open(f"{out_dir}/ops/runs.jsonl")]
+    jobs = {
+        r["run_id"]: r["job"]
+        for r in recs
+        if r["status"] == "running" and r["target_date"] == run_date
+    }
+    return {
+        jobs[r["run_id"]]: r["status"]
+        for r in recs
+        if r["run_id"] in jobs and r["status"] != "running"
+    }
+
+
+def test_failed_step_is_recorded_and_sibling_chains_publish(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A failing step is recorded `failed` and its exception reaches the
+    caller after the other chains have run and published; a failing
+    silver step keeps the snapshot, which reads silver, from starting."""
+    from japanstockdatapipeline_spark import pipeline
+    from japanstockdatapipeline_spark.streaming.incremental import (
+        published_versions,
+    )
+
+    out_dir = str(tmp_path / "lake")
+
+    def versions(table):
+        return published_versions(spark, f"{out_dir}/gold/{table}")
+
+    breadth_error = RuntimeError("breadth source unavailable")
+
+    def failing_breadth(*args, **kwargs):
+        raise breadth_error
+
+    monkeypatch.setattr(pipeline, "market_breadth", failing_breadth)
+    with pytest.raises(RuntimeError) as raised:
+        run_daily_pipeline(spark, sf_dir, out_dir, "2026-08-13")
+    assert raised.value is breadth_error
+    assert _step_statuses(out_dir, "2026-08-13") == {
+        "silver_events": "success",
+        "gold_snapshot": "success",
+        "gold_market_indicators": "failed",
+        "gold_stock_screen": "success",
+    }
+    assert (versions("snapshot"), versions("stock_screen")) == ([1], [1])
+    assert versions("market_indicators") == []
+
+    monkeypatch.undo()
+    silver_error = RuntimeError("events source unavailable")
+
+    def failing_silver(*args, **kwargs):
+        raise silver_error
+
+    monkeypatch.setattr(pipeline, "_silver_events", failing_silver)
+    with pytest.raises(RuntimeError) as raised:
+        run_daily_pipeline(spark, sf_dir, out_dir, "2026-08-14")
+    assert raised.value is silver_error
+    # no gold_snapshot step started: it has no manifest record at all
+    assert _step_statuses(out_dir, "2026-08-14") == {
+        "silver_events": "failed",
+        "gold_market_indicators": "success",
+        "gold_stock_screen": "success",
+    }
+    assert versions("snapshot") == [1]
+    assert (versions("market_indicators"), versions("stock_screen")) == ([1], [1, 2])
+
+
+def test_published_versions_hold_their_plans_rows(spark, sf_dir, tmp_path):
+    """Forward, backfill, same-date rerun, forward: after each run, every
+    retained version of each gold table holds, without its `as_of`
+    column, exactly the rows of its plan collected directly, and `as_of`
+    is the date of the run that published it. `_LATEST` serves the
+    newest forward run."""
+    import datetime as dt
+
+    from japanstockdatapipeline_spark.operators.snapshot import technical_snapshot
+    from japanstockdatapipeline_spark.pipeline import _served_as_of, read_gold
+    from japanstockdatapipeline_spark.plans.composed import stock_metrics_pipeline
+    from japanstockdatapipeline_spark.plans.technical import market_breadth
+    from japanstockdatapipeline_spark.streaming.incremental import (
+        published_versions,
+    )
+
+    def rows(df):
+        # repr keeps NULLs and NaNs comparable and floats exact
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    out_dir = str(tmp_path / "lake")
+    expected, run_of = None, {t: {} for t in ("snapshot", "market_indicators", "stock_screen")}
+    newest = None
+    for run_date, forward in [
+        ("2026-08-13", True),
+        ("2026-08-10", False),
+        ("2026-08-13", True),
+        ("2026-08-14", True),
+    ]:
+        run_daily_pipeline(spark, sf_dir, out_dir, run_date)
+        if forward:
+            newest = dt.date.fromisoformat(run_date)
+        if expected is None:
+            silver = spark.read.parquet(f"{out_dir}/silver/events")
+            expected = {
+                "snapshot": rows(technical_snapshot(silver, "user_id", "ts_us", "value")),
+                "market_indicators": rows(market_breadth(spark, sf_dir)),
+                "stock_screen": rows(stock_metrics_pipeline(spark, sf_dir)),
+            }
+        for table, want in expected.items():
+            root = f"{out_dir}/gold/{table}"
+            retained = published_versions(spark, root)
+            run_of[table][retained[-1]] = dt.date.fromisoformat(run_date)
+            for v in retained:
+                df = read_gold(spark, out_dir, table, as_of=newest, version=v)
+                assert rows(df.drop("as_of")) == want, (run_date, table, v)
+                stamped = {r[0] for r in df.select("as_of").distinct().collect()}
+                assert stamped == {run_of[table][v]}, (run_date, table, v)
+            assert _served_as_of(spark, root) == newest, (run_date, table)
+            served = read_gold(spark, out_dir, table, as_of=newest)
+            assert {r[0] for r in served.select("as_of").distinct().collect()} == {newest}
+
+
+def test_publish_layer_resolves_jvm_classes_by_full_name(spark, tmp_path):
+    """Reading a published table's pointer and `_AS_OF` marker reaches
+    the Hadoop `Path` and commons-io `IOUtils` classes in one py4j
+    lookup each: no reflection lookup of a bare package such as `org` or
+    `org.apache`, each of which is a failed class lookup in the JVM."""
+    import datetime as dt
+
+    from japanstockdatapipeline_spark.pipeline import _as_of_marker, _version_as_of
+    from japanstockdatapipeline_spark.streaming.incremental import (
+        _write_small_file,
+        latest_version,
+        publish_version,
+    )
+
+    root = str(tmp_path / "gold")
+    df = spark.range(2).select(F.to_date(F.lit("2026-08-13")).alias("as_of"))
+    v = publish_version(df, root)
+    _write_small_file(spark, _as_of_marker(root, v), "2026-08-13")
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, lookups = client.send_command, []
+
+    def recorded_send(command, *args, **kwargs):
+        # a py4j reflection lookup of a name: "r\nu\n<name>\n..."
+        if command.startswith("r\nu\n"):
+            lookups.append(command.split("\n")[2])
+        return send(command, *args, **kwargs)
+
+    client.send_command = recorded_send
+    try:
+        served = _version_as_of(spark, root, latest_version(spark, root))
+    finally:
+        client.send_command = send
+    assert served == dt.date(2026, 8, 13)
+    assert set(lookups) == {"org.apache.hadoop.fs.Path", "org.apache.commons.io.IOUtils"}
+
+
+def test_nanos_events_load_from_concurrent_threads(spark, tmp_path):
+    """Loads of a TIMESTAMP(NANOS) events file, which set and restore
+    the session-wide nanosAsLong flag, may run at once (the pipeline's
+    silver and indicators steps both load events): each returns ts_us
+    truncated to microseconds, and the flag is unset afterwards. Each
+    thread loads its own copy of the file, so the per-path schema lock
+    does not serialize the loads before they reach the flag."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import InheritableThread
+
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(flag, None) is None
+    ts_ns = [1_786_000_000_123_456_789, 1_786_000_100_999_999_999, 1_786_086_400_000_000_001]
+    table = pa.table(
+        {
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts_ns, pa.timestamp("ns")),
+            "user_id": pa.array([1, 1, 2], pa.int64()),
+            "event_type": pa.array(["click"] * 3),
+            "value": pa.array([1.0, 2.0, 3.0]),
+            "props": pa.array([""] * 3),
+        }
+    )
+    want = [(i + 1, ns // 1000) for i, ns in enumerate(ts_ns)]
+    # a few rounds of three concurrent loads: one round does not always
+    # interleave the loads' set/restore of the flag
+    for round_ in range(4):
+        dirs = [tmp_path / f"{round_}-{i}" for i in range(3)]
+        for d in dirs:
+            d.mkdir()
+            pq.write_table(table, d / "events.parquet", version="2.6")
+        results, errors = {}, []
+
+        def load(d):
+            try:
+                df = load_table(spark, str(d), "events")
+                results[d] = sorted(tuple(r) for r in df.select("event_id", "ts_us").collect())
+            except Exception as e:  # noqa: BLE001 — reported below
+                errors.append(e)
+
+        threads = [InheritableThread(load, args=(d,)) for d in dirs]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert errors == []
+        assert results == {d: want for d in dirs}
+        assert spark.conf.get(flag, None) is None
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):

@@ -87,6 +87,41 @@ def test_run_manifest_idempotency(tmp_path):
     assert m.completed_dates("sync_bars") == {"2026-08-12"}
 
 
+def test_run_manifest_appends_from_concurrent_threads(tmp_path):
+    """Steps on concurrent threads share one manifest: every record
+    lands whole, on its own line, including failures whose error text
+    is longer than a write buffer."""
+    import json
+    import sys
+    import threading
+
+    m = RunManifest(str(tmp_path / "runs.jsonl"))
+    error = "x" * 100_000
+
+    def steps(worker):
+        for i in range(25):
+            run_id = m.start(f"job{worker}", f"2026-08-{i % 28 + 1:02d}")
+            m.finish(run_id, "failed", error=error)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=steps, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    recs = [json.loads(line) for line in open(m.path)]
+    assert len(recs) == 8 * 25 * 2
+    started = {r["run_id"] for r in recs if r["status"] == "running"}
+    assert len(started) == 8 * 25
+    assert all(r["error"] == error for r in recs if r["status"] == "failed")
+    assert {r["run_id"] for r in recs if r["status"] == "failed"} == started
+
+
 def test_run_manifest_failure_notification(tmp_path):
     """ST7 + the reference's failure-email hook (cron-a.ts:340-353):
     a failed run notifies exactly once; an idempotent re-run of the
