@@ -109,6 +109,57 @@ def _batch_matrix(col: pa.ListArray, dim: int, what: str) -> np.ndarray:
     return flat.to_numpy(zero_copy_only=False).reshape(len(col), dim)
 
 
+def _query_matrix(rows: list, what: str) -> tuple[np.ndarray, np.ndarray]:
+    """Collected (id, vector, ...) rows as int64 ids and an (n, dim)
+    float64 matrix, checked like a corpus batch (_batch_matrix): a
+    null or ragged query vector raises ValueError naming `what`."""
+    vecs = [r[1] for r in rows]
+    dim = next((len(v) for v in vecs if v is not None), 0)
+    Q = _batch_matrix(pa.array(vecs, type=pa.list_(pa.float64())), dim, what)
+    return np.array([r[0] for r in rows], dtype=np.int64), Q
+
+
+def _topk_rows(score: np.ndarray, ids: np.ndarray, k: int):
+    """The tie-exact per-batch cut: for each query column j of `score`
+    (rows x queries), the rows of its k smallest scores under
+    (score, id) ascending, non-finite scores dropped. Boundary ties
+    resolve by the same total order as the global cut, so the union of
+    per-batch cuts holds every query's global top-k exactly. Returns
+    (query index, row index) arrays."""
+    kth = min(k, len(ids)) - 1
+    thr = np.partition(score, kth, axis=0)[kth]
+    qi, ri = [], []
+    for j in range(score.shape[1]):
+        sel = np.nonzero(~(score[:, j] > thr[j]))[0]  # <= thr, NaN-safe
+        order = sel[np.lexsort((ids[sel], score[sel, j]))][:k]
+        ri.append(order[np.isfinite(score[order, j])])
+        qi.append(np.full(len(ri[-1]), j))
+    return np.concatenate(qi), np.concatenate(ri)
+
+
+def _require_integral(what: str, *cols: tuple[DataFrame, str]) -> None:
+    """The Arrow top-k kernels pack ids and labels into int64: reject
+    other types loudly (strings would crash deep in numpy, floats
+    would round)."""
+    for df_, c_ in cols:
+        dt = df_.schema[c_].dataType.simpleString()
+        if dt not in ("bigint", "int", "smallint", "tinyint"):
+            raise ValueError(f"{what} needs integral id/label columns; {c_!r} is {dt}")
+
+
+def _rank_by_cos(scored: DataFrame, k: int, q_id_col: str = "q_id") -> DataFrame:
+    """Each query's k best rows under (cos desc, neighbor_id asc),
+    ranked 1..k: the one cosine re-rank of every top-k operator."""
+    w = Window.partitionBy(q_id_col).orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id_col, "neighbor_id", "cos", "rank")
+    )
+
+
 def _cosine_argmax(cells: list[int], C: np.ndarray):
     """mapInArrow kernel for one Lloyd assignment over (id, __v)
     batches: each row's cell is the argmax of its 6dp-rounded cosine
@@ -523,49 +574,25 @@ def pq_adc_topk(
     emitted `cos` is the TRUE cosine of the retrieved neighbor, so
     recall audits compare directly against the exact/LSH/IVF columns.
 
-    Scale notes: `queries` is a (q_id, q_vec) frame like every
-    sibling top-k operator (small by construction) and broadcasts;
-    the corpus side is one
-    compressed-domain scan — the ranking consumes ONLY the
-    reconstructions, and the TRUE cosine is joined back from the raw
-    vectors for the <= queries*k surviving rows (broadcast), so
-    full-precision math never rides the corpus scan. In production
-    the per-query m*k_cells distance lookup table (the LUT trick) and
-    IVF cell probing both drop in without changing these semantics;
-    this operator registers the exhaustive-over-codes form so the
-    oracle can replay it exactly.
+    The exhaustive form of ivf_pq_probe: the whole coded corpus is one
+    cell that every query probes, so the ranking is the same Arrow ADC
+    pass (`_adc_shortlist` — the queries are collected at call time,
+    bounded by construction) and the TRUE cosine is joined back from
+    the raw vectors for the <= queries*k surviving rows only
+    (`_true_cos`), so full-precision math never rides the corpus scan.
+    Ids are packed into int64, so both id columns must be integral.
     """
+    _require_integral("pq_adc_topk", (queries, q_id_col), (vecs, id_col))
     coded = _pq_reconstruct(
         vecs, m, k_cells, iters, id_col=id_col, vec_col=vec_col, dim=dim
-    ).select(F.col(id_col).alias("neighbor_id"), "__recon")
+    ).select(F.lit(0).alias("cell"), F.col(id_col).alias("neighbor_id"), "__recon")
     q = queries.select(
         F.col(q_id_col).alias("q_id"),
         as_double_array(F.col(q_vec_col)).alias("__qv"),
     )
-    scored = (
-        coded.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            "__qv",
-            F.round(_l2sq(F.col("__qv"), F.col("__recon")), 6).alias("__adc"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("__adc").asc(), F.col("neighbor_id").asc()
-    )
-    cut = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    nv = vecs.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(F.col(vec_col)).alias("__nv"),
-    )
-    return (
-        nv.join(F.broadcast(cut), "neighbor_id")
-        .withColumn(
-            "cos", F.round(cosine_similarity(F.col("__qv"), F.col("__nv")), 6)
-        )
-        .select("q_id", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
+    cut = _adc_shortlist(coded, q.withColumn("cell", F.lit(0)), k, "pq_adc_topk")
+    return _true_cos(cut, q, vecs, id_col, vec_col).select(
+        "q_id", "neighbor_id", "cos", "rank"
     )
 
 
@@ -586,13 +613,14 @@ def pq_adc_rerank_topk(
 ) -> DataFrame:
     """Two-stage PQ serving (the production IVF-PQ recipe, and the ANN
     analog of the dedup family's lsh_verified_pairs composition): the
-    compressed-domain ADC scan produces a `candidates`-deep shortlist
-    per query, then the shortlist alone is re-ranked by TRUE cosine
-    (descending, ascending-neighbor tie-break) and cut to top-k —
-    exactness restored on |shortlist| rows, recall bounded only by
-    whether the true neighbors survive the ADC cut (candidates/k is
-    the recall dial). Costs one extra window over candidates*|queries|
-    rows — nothing corpus-sized."""
+    compressed-domain ADC scan (pq_adc_topk) produces a
+    `candidates`-deep shortlist per query with its true cosines, then
+    the shortlist alone is re-ranked by TRUE cosine (descending,
+    ascending-neighbor tie-break; `_rank_by_cos`, ivf_pq_probe's
+    re-rank) and cut to top-k — exactness restored on |shortlist|
+    rows, recall bounded only by whether the true neighbors survive
+    the ADC cut (candidates/k is the recall dial). Nothing
+    corpus-sized is added."""
     cand = pq_adc_topk(
         vecs,
         queries,
@@ -605,15 +633,8 @@ def pq_adc_rerank_topk(
         q_id_col=q_id_col,
         q_vec_col=q_vec_col,
         dim=dim,
-    ).select("q_id", "neighbor_id", "cos")
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rank_by_cos(cand, k)
 
 
 def ivf_pq_rerank_topk(
@@ -848,49 +869,46 @@ def ivf_pq_probe(
     """The PROBE half of ivf_pq_rerank_topk over a (possibly
     persisted) build: coarse probe -> ADC over probed cells ->
     shortlist -> true-cosine re-rank. `vecs` is the raw-vector table
-    the shortlist joins back to for the re-rank: full-precision math
-    runs for <= queries*candidates rows ONLY, never the probed corpus
-    slice — the compressed index stays the only corpus-sized input.
-    The probe ranking cosine is ROUNDED to 6dp (ascending-cell
-    tie-break, the module's argmax convention): centroids are float
-    avg() aggregates whose accumulation order the engines don't fix,
-    so unrounded near-ties could probe different cells per engine.
+    the shortlist joins back to for the re-rank (`_true_cos`, shared
+    with pq_adc_topk): full-precision math runs for
+    <= queries*candidates rows ONLY, never the probed corpus slice —
+    the compressed index stays the only corpus-sized input. The probe
+    cells come from `probe_cells` (6dp-rounded cosine, ascending-cell
+    tie-break: centroids are float avg() aggregates whose
+    accumulation order the engines don't fix).
 
     The ADC stage is ONE mapInArrow pass over the probed cells' codes
-    (`_adc_shortlist`): the probe-cell selection's (q_id, cell, qvec)
+    (`_adc_shortlist`): the probe-cell selection's (q_id, qvec, cell)
     result — O(queries * n_probe) rows, bounded by construction like
     the brute_force_topk_matmul query collect — is collected into the
     closure, so building the frame runs that job eagerly and freezes
     the probed-cell set at call time. Ids are packed into int64, so
     both id columns must be integral."""
-    for df_, c_ in ((queries, q_id_col), (vecs, id_col)):
-        dt = df_.schema[c_].dataType.simpleString()
-        if dt not in ("bigint", "int", "smallint", "tinyint"):
-            raise ValueError(f"ivf_pq_probe needs integral ids; {c_!r} is {dt}")
+    _require_integral("ivf_pq_probe", (queries, q_id_col), (vecs, id_col))
     q = queries.select(
         F.col(q_id_col).alias("q_id"),
         as_double_array(F.col(q_vec_col)).alias("__qv"),
     )
-    shortlist = _adc_shortlist(corpus, probe_cells(cents, q, n_probe), candidates)
-    # re-rank joins the query vectors back by q_id (the Arrow
-    # shortlist does not carry __qv through the pass)
-    shortlist = shortlist.select("q_id", "neighbor_id").join(
-        F.broadcast(q), "q_id"
+    shortlist = _adc_shortlist(
+        corpus, probe_cells(cents, q, n_probe), candidates, "ivf_pq_probe"
     )
+    return _rank_by_cos(_true_cos(shortlist, q, vecs, id_col, vec_col), k)
+
+
+def _true_cos(
+    shortlist: DataFrame, q: DataFrame, vecs: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The ADC shortlist's join-back: the query vectors by q_id and the
+    raw neighbor vectors (both broadcast sides bounded by the
+    shortlist) give each shortlist row its TRUE cosine, rounded at 6 dp
+    Spark-side."""
+    s = shortlist.join(F.broadcast(q), "q_id")
     nv = vecs.select(
         F.col(id_col).alias("neighbor_id"),
         as_double_array(F.col(vec_col)).alias("__nv"),
     )
-    rerank = nv.join(F.broadcast(shortlist), "neighbor_id").withColumn(
+    return nv.join(F.broadcast(s), "neighbor_id").withColumn(
         "cos", F.round(cosine_similarity(F.col("__qv"), F.col("__nv")), 6)
-    )
-    w_final = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
     )
 
 
@@ -918,94 +936,67 @@ def probe_cells(cents: DataFrame, q: DataFrame, n_probe: int) -> DataFrame:
 
 
 def _adc_shortlist(
-    corpus: DataFrame, probes: DataFrame, candidates: int
+    corpus: DataFrame, probes: DataFrame, candidates: int, what: str
 ) -> DataFrame:
     """ADC shortlist: one Arrow pass over the probed cells' codes.
-    Collects the probe assignment (O(queries * n_probe) rows — the
-    bounded query-side collect of the brute_force_topk_matmul shape,
-    never the corpus), builds a per-cell query matrix, filters the
-    index to the probed-cell union (a pushed-down `isin`,
+    Collects the (q_id, __qv, cell) probe assignment (O(queries *
+    n_probe) rows — the bounded query-side collect, never the corpus),
+    filters the index to the probed-cell union (a pushed-down `isin`,
     partition-prunable at scale), and scores each Arrow batch with one
     matrix multiply per cell present: ||r||^2 - 2 r.q + ||q||^2,
-    rounded half-up at 6dp. Each batch emits its local
-    top-`candidates` per query under (adc ASC, neighbor_id ASC) —
-    boundary TIES at the local threshold are resolved by the same
-    total order the global cut uses, so the union-of-local-tops
-    property is exact, not approximate, and the global window sees
-    batches*queries*candidates rows, never the probed slice.
-    Self-matches (neighbor == query id) are masked before the cut.
-    The recon vectors are read as ONE zero-copy flat float64 buffer
-    per batch — the per-row list->Python conversion of a pandas form
-    was the measured probe wall at 2M vectors."""
+    rounded half-up at 6dp. Each batch keeps its local
+    top-`candidates` per query with self-matches masked
+    (`_topk_rows`, exact at boundary ties), and a window cuts their
+    union to (q_id, neighbor_id, rank) under (adc, neighbor_id)
+    ascending. The recon vectors are read as ONE zero-copy flat
+    float64 buffer per batch — the per-row list->Python conversion of
+    a pandas form was the measured probe wall at 2M vectors."""
     prows = probes.collect()
-    per_cell: dict[int, tuple] = {}
-    for r in prows:
-        per_cell.setdefault(r["cell"], []).append((r["q_id"], list(r["__qv"])))
+    q_ids, Q = _query_matrix(prows, what)
+    q_cells = np.array([r[2] for r in prows], dtype=np.int64)
     per_cell = {
-        c: (
-            np.array([p[0] for p in pairs], dtype=np.int64),
-            np.array([p[1] for p in pairs], dtype=np.float64),
-        )
-        for c, pairs in per_cell.items()
+        int(c): (q_ids[q_cells == c], Q[q_cells == c]) for c in np.unique(q_cells)
     }
-    probed_cells = sorted(per_cell)
-    recon_dim = next(
-        (Q.shape[1] for _, Q in per_cell.values() if Q.size), None
-    )
 
     def batches(it):
         for rb in it:
-            n_rows = rb.num_rows
-            if n_rows == 0:
+            if rb.num_rows == 0:
                 continue
             cells_all = rb.column(0).to_numpy(zero_copy_only=False)
             ids_all = rb.column(1).to_numpy(zero_copy_only=False)
-            R_all = _batch_matrix(rb.column(2), recon_dim, "ivf_pq_probe")
-            out_q, out_n, out_d = [], [], []
+            R_all = _batch_matrix(rb.column(2), Q.shape[1], what)
+            out = []
             for cell in np.unique(cells_all):
-                qids, Q = per_cell[int(cell)]
+                qids, Qc = per_cell[int(cell)]
                 mask = cells_all == cell
-                ids = ids_all[mask]
-                R = R_all[mask]
+                ids, R = ids_all[mask], R_all[mask]
                 # ||r - q||^2 expanded; fp error vs the fold order is
                 # ~1e-12, far inside the 5e-7 boundary epsilon the
                 # canary certifies is clear
                 d = _half_up6(
                     (R * R).sum(axis=1, keepdims=True)
-                    - 2.0 * (R @ Q.T)
-                    + (Q * Q).sum(axis=1)[None, :]
+                    - 2.0 * (R @ Qc.T)
+                    + (Qc * Qc).sum(axis=1)[None, :]
                 )
                 d[ids[:, None] == qids[None, :]] = np.inf  # self-match
-                n = len(ids)
-                cn = min(candidates, n)
-                thr = np.partition(d, cn - 1, axis=0)[cn - 1]
-                for j in range(len(qids)):
-                    sel = np.nonzero(d[:, j] <= thr[j])[0]
-                    order = sel[np.lexsort((ids[sel], d[sel, j]))][:candidates]
-                    order = order[np.isfinite(d[order, j])]
-                    out_q.append(np.full(len(order), qids[j], dtype=np.int64))
-                    out_n.append(ids[order])
-                    out_d.append(d[order, j])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), type=pa.int64()),
-                        pa.array(np.concatenate(out_n), type=pa.int64()),
-                        pa.array(np.concatenate(out_d), type=pa.float64()),
-                    ],
-                    names=["q_id", "neighbor_id", "__adc"],
-                )
+                qi, ri = _topk_rows(d, ids, candidates)
+                out.append((qids[qi], ids[ri], d[ri, qi]))
+            qs, ns, ds = (np.concatenate(c) for c in zip(*out))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qs), pa.array(ns, type=pa.int64()), pa.array(ds)],
+                names=["q_id", "neighbor_id", "__adc"],
+            )
 
     cand = (
-        corpus.filter(F.col("cell").isin(probed_cells))
+        corpus.filter(F.col("cell").isin(sorted(per_cell)))
         .select("cell", "neighbor_id", "__recon")
         .mapInArrow(batches, schema="q_id bigint, neighbor_id bigint, __adc double")
     )
-    w_short = Window.partitionBy("q_id").orderBy(
+    w = Window.partitionBy("q_id").orderBy(
         F.col("__adc").asc(), F.col("neighbor_id").asc()
     )
     return (
-        cand.withColumn("__sr", F.row_number().over(w_short))
-        .filter(F.col("__sr") <= candidates)
-        .drop("__sr", "__adc")
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= candidates)
+        .select("q_id", "neighbor_id", "rank")
     )

@@ -1,18 +1,35 @@
-"""Similarity search: brute-force cosine top-k + LSH-bucketed variant.
+"""Similarity search: exact cosine top-k, its LSH- and IVF-bucketed
+approximations, and LSH near-dup pairs.
 
 Reference: 00101_stock_factor_vectors.sql:59-96 — exact kNN by
 cosine distance (deliberately no ANN index at ~3.7k vectors).
 Scale path (BASELINE.json): at 100 TB the corpus side is huge but
-the *query* side is small — broadcast the queries, compute cosine
-at scan speed as a Catalyst expression, TakeOrdered per query.
+the *query* side is small. `brute_force_topk_matmul` and
+`hard_negative_topk_matmul` collect the queries into a matrix and
+stream the corpus through ONE mapInArrow kernel (`_matmul_topk`):
+a matmul per Arrow batch, the tie-exact per-batch cut the ADC
+shortlist uses, then one window over the candidates.
+`brute_force_topk` is the same ranking as Catalyst expressions — the
+test reference and the only path for non-integral ids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double_array, cosine_similarity
+from .kmeans import (
+    _batch_matrix,
+    _centroids_of,
+    _query_matrix,
+    _rank_by_cos,
+    _require_integral,
+    _topk_rows,
+    probe_cells,
+)
 
 __all__ = [
     "brute_force_topk",
@@ -69,8 +86,7 @@ def brute_force_topk(
         "neighbor_id",
         cosine_similarity(F.col("__cv"), F.col("__qv")).alias("cos"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_by_cos(scored, k, q_id_col)
 
 
 def lsh_signature_expr(tables):
@@ -188,8 +204,7 @@ def lsh_bucketed_topk(
     scored = pairs.dropDuplicates([q_id_col, "neighbor_id"]).select(
         q_id_col, "neighbor_id", cosine_similarity(F.col("__cv"), F.col("__qv")).alias("cos")
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_by_cos(scored, k, q_id_col)
 
 
 def ivf_topk(
@@ -216,45 +231,97 @@ def ivf_topk(
     shuffle, never a full cross product. Recall grows with n_probe.
     """
     c = corpus.select(
-        F.col(coarse_col).alias("__cell"),
+        F.col(coarse_col).alias("cell"),
         F.col(id_col).alias("neighbor_id"),
         as_double_array(F.col(vec_col)).alias("__cv"),
     )
-    # cell centroids via posexplode + per-position mean (one shuffle) —
-    # the SAME helper the k-means quantizer uses, so the registered
-    # IVF-over-kmeans composition has one centroid definition that
-    # cannot drift between build and probe
-    from .kmeans import _centroids_of
-
-    centroids = _centroids_of(
-        c.select(F.col("__cell").alias("cell"), "__cv"), "__cv"
-    ).select(F.col("cell").alias("__cell"), F.col("__cvec").alias("__centroid"))
-    q = queries.select(F.col(q_id_col), as_double_array(F.col(q_vec_col)).alias("__qv"))
-    probe_w = Window.partitionBy(q_id_col).orderBy(
-        F.col("__ccos").desc(), F.col("__cell").asc()
+    # cell centroids and the probe ranking are the k-means module's
+    # (_centroids_of, probe_cells), so the registered IVF-over-kmeans
+    # composition has one centroid and probe definition that cannot
+    # drift between build and probe
+    centroids = _centroids_of(c.select("cell", "__cv"), "__cv").select(
+        "cell", F.col("__cvec").alias("__centroid")
     )
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        # probe ranking cosine ROUNDED to 6dp (ascending-cell
-        # tie-break): centroids are float avg() aggregates whose
-        # accumulation order the engines don't fix, so an unrounded
-        # near-tie could probe different cells per engine
-        .withColumn(
-            "__ccos",
-            F.round(cosine_similarity(F.col("__qv"), F.col("__centroid")), 6),
-        )
-        .withColumn("__prank", F.row_number().over(probe_w))
-        .filter(F.col("__prank") <= n_probe)
-        .select(q_id_col, "__qv", "__cell")
+    q = queries.select(
+        F.col(q_id_col).alias("q_id"), as_double_array(F.col(q_vec_col)).alias("__qv")
     )
-    pairs = c.join(F.broadcast(probes), "__cell").filter(
-        F.col("neighbor_id") != F.col(q_id_col)
+    pairs = c.join(F.broadcast(probe_cells(centroids, q, n_probe)), "cell").filter(
+        F.col("neighbor_id") != F.col("q_id")
     )
     scored = pairs.select(
-        q_id_col, "neighbor_id", cosine_similarity(F.col("__cv"), F.col("__qv")).alias("cos")
+        F.col("q_id").alias(q_id_col),
+        "neighbor_id",
+        cosine_similarity(F.col("__cv"), F.col("__qv")).alias("cos"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_by_cos(scored, k, q_id_col)
+
+
+def _matmul_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    what: str,
+    cols: tuple[str, str, str, str],
+    labels: tuple[str, str] | None = None,
+) -> DataFrame:
+    """The one exact cosine top-k kernel. `cols` = (id, vec, q_id,
+    q_vec); with `labels` = (label, q_label), same-label pairs are
+    masked too and NULL labels drop out on both sides.
+
+    The queries (small by construction) are collected at call time
+    into a unit-norm matrix; the corpus streams through mapInArrow, each
+    batch read as one flat float64 matrix (`_batch_matrix`) and scored
+    with one `batch @ Q.T`. Self pairs (and same-label pairs) are
+    masked BEFORE the per-batch cut (`_topk_rows` under (-cos, id)),
+    so the union of per-batch cuts holds every query's global top-k
+    exactly, ties included, and one window ranks it. A zero vector on
+    either side scores cosine 0.0 (norm guarded to 1), never NaN."""
+    id_col, vec_col, q_id_col, q_vec_col = cols
+    c_cols = [F.col(id_col), as_double_array(F.col(vec_col))]
+    q_cols = [F.col(q_id_col), as_double_array(F.col(q_vec_col))]
+    checks = [(corpus, id_col), (queries, q_id_col)]
+    if labels:
+        # a NULL label can't be asserted different (SQL <>); dropping
+        # them JVM-side also keeps the Arrow label column int64
+        corpus = corpus.filter(F.col(labels[0]).isNotNull())
+        queries = queries.filter(F.col(labels[1]).isNotNull())
+        c_cols.append(F.col(labels[0]))
+        q_cols.append(F.col(labels[1]))
+        checks += [(corpus, labels[0]), (queries, labels[1])]
+    _require_integral(what, *checks)
+    rows = queries.select(*q_cols).collect()
+    q_ids, Q = _query_matrix(rows, what)
+    q_labels = np.array([r[2] for r in rows], dtype=np.int64) if labels else None
+    qn = np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = Q / np.where(qn == 0, 1.0, qn)
+
+    def batches(it):
+        for rb in it:
+            if rb.num_rows == 0 or not len(q_ids):
+                continue
+            ids = rb.column(0).to_numpy(zero_copy_only=False)
+            C = _batch_matrix(rb.column(1), Q.shape[1], what)
+            cn = np.linalg.norm(C, axis=1, keepdims=True)
+            cos = (C / np.where(cn == 0, 1.0, cn)) @ Qn.T  # (batch, queries)
+            score = -cos
+            score[ids[:, None] == q_ids[None, :]] = np.inf  # self pairs
+            if labels:
+                lab = rb.column(2).to_numpy(zero_copy_only=False)
+                score[lab[:, None] == q_labels[None, :]] = np.inf
+            qi, ri = _topk_rows(score, ids, k)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(q_ids[qi]),
+                    pa.array(ids[ri], type=pa.int64()),
+                    pa.array(cos[ri, qi]),
+                ],
+                names=[q_id_col, "neighbor_id", "cos"],
+            )
+
+    cand = corpus.select(*c_cols).mapInArrow(
+        batches, schema=f"{q_id_col} bigint, neighbor_id bigint, cos double"
+    )
+    return _rank_by_cos(cand, k, q_id_col)
 
 
 def brute_force_topk_matmul(
@@ -267,63 +334,16 @@ def brute_force_topk_matmul(
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
 ) -> DataFrame:
-    """Exact top-k via numpy/BLAS: queries collected to a (q, d) matrix
-    (they are small by construction), corpus streamed through
-    mapInPandas in Arrow batches, one `batch @ Q.T` matrix multiply per
-    batch, per-batch top-k, then a global re-rank of the per-batch
-    candidates (correct because per-query global top-k ⊆ union of
-    per-batch top-k).
+    """Exact top-k by cosine via numpy/BLAS (`_matmul_topk`): the
+    registered exact path for integral ids, same rows and tie-break
+    (cos desc, neighbor_id asc) as brute_force_topk at BLAS throughput
+    instead of per-element Catalyst expression evaluation.
 
-    This is the vectorized-Pandas-UDF fast path for wide embeddings:
-    same results as brute_force_topk (ties aside at ~1e-15), ~BLAS
-    throughput instead of per-element Catalyst expression evaluation.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # the Arrow batch path packs ids as int64 — reject other id types
-    # loudly instead of silently coercing (strings would crash deep in
-    # numpy, floats would round)
-    for df_, col_ in ((corpus, id_col), (queries, q_id_col)):
-        dt = df_.schema[col_].dataType.simpleString()
-        if dt not in ("bigint", "int", "smallint", "tinyint"):
-            raise ValueError(
-                f"brute_force_topk_matmul needs an integral id column; "
-                f"{col_!r} is {dt} (use brute_force_topk for other id types)"
-            )
-
-    qrows = queries.select(q_id_col, q_vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    # zero-norm queries get the same norm=1 guard as the corpus side:
-    # cosine 0.0 to everything (deterministic rank by neighbor_id)
-    # instead of a NaN row that each engine orders differently
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn
-
-    def batches(it):
-        for pdf in it:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            C = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            norms = np.linalg.norm(C, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            cos = (C / norms) @ Qn.T  # (batch, q)
-            # k+1: the self-match (filtered downstream) may occupy one slot
-            top = min(k + 1, len(ids))
-            idx = np.argpartition(-cos, top - 1, axis=0)[:top]  # per query
-            out = {
-                q_id_col: np.repeat(q_ids, top),
-                "neighbor_id": ids[idx].T.ravel(),
-                "cos": np.take_along_axis(cos, idx, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(
-        batches, schema=f"{q_id_col} bigint, neighbor_id bigint, cos double"
-    ).filter(F.col("neighbor_id") != F.col(q_id_col))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    Output: (q_id, neighbor_id, cos, rank); self pairs excluded."""
+    return _matmul_topk(
+        corpus, queries, k, "brute_force_topk_matmul",
+        (id_col, vec_col, q_id_col, q_vec_col),
+    )
 
 
 def hard_negative_topk_matmul(
@@ -344,95 +364,17 @@ def hard_negative_topk_matmul(
     trainer samples (north-star: training-data prep over an embedding
     column).
 
-    Same BLAS shape as brute_force_topk_matmul: queries (small by
-    construction) collected to a matrix, corpus streamed through
-    mapInPandas, one matmul per Arrow batch — but same-label pairs are
-    masked to -inf BEFORE the per-batch top-k, so the per-query global
-    top-k over the allowed (different-label) set is still ⊆ the union
-    of per-batch top-k. Self-pairs share the query's label and are
-    masked with the rest; NULL-label rows on EITHER side are excluded
-    (a NULL label can't be asserted different, matching SQL <>
-    semantics — a NULL-label query yields no rows).
+    The brute_force_topk_matmul kernel (`_matmul_topk`) with the
+    same-label mask: same-label pairs are masked before the per-batch
+    cut, so the top-k over the allowed (different-label) set stays
+    exact. NULL-label rows on EITHER side are excluded (a NULL label
+    can't be asserted different, matching SQL <> semantics — a
+    NULL-label query yields no rows). Labels are compared as int64,
+    so they must be integral like the ids.
 
     Output: (q_id, neighbor_id, cos, rank), tie-break (cos desc, id).
     """
-    import numpy as np
-    import pandas as pd
-
-    # labels get the same loud upfront dtype check as the ids: they are
-    # compared as int64 inside the BLAS batch, and an int64 that
-    # round-tripped through float64 silently corrupts above 2^53
-    for df_, col_ in (
-        (corpus, id_col),
-        (queries, q_id_col),
-        (corpus, label_col),
-        (queries, q_label_col),
-    ):
-        dt = df_.schema[col_].dataType.simpleString()
-        if dt not in ("bigint", "int", "smallint", "tinyint"):
-            raise ValueError(
-                f"hard_negative_topk_matmul needs integral id/label columns; "
-                f"{col_!r} is {dt}"
-            )
-
-    qrows = [
-        r
-        for r in queries.select(q_id_col, q_vec_col, q_label_col).collect()
-        if r[2] is not None
-    ]
-    if not qrows:
-        return (
-            corpus.sparkSession.range(0)
-            .select(
-                F.col("id").alias(q_id_col),
-                F.col("id").alias("neighbor_id"),
-                F.lit(0.0).alias("cos"),
-                F.lit(0).alias("rank"),
-            )
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    q_labels = np.array([int(r[2]) for r in qrows], dtype=np.int64)
-    # same zero-norm guard as brute_force_topk_matmul: a zero-norm
-    # query scores cosine 0.0 everywhere instead of NaN rows that
-    # np.isfinite would silently drop (divergent vs the SQL oracle)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            # NULL-label rows are filtered JVM-side BEFORE mapInPandas
-            # (below): an Arrow batch containing a null would reach
-            # pandas as float64, silently corrupting labels above 2^53
-            # — with the nulls gone the column stays int64 end to end
-            labels = pdf[label_col].to_numpy(dtype=np.int64)
-            C = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            norms = np.linalg.norm(C, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            cos = (C / norms) @ Qn.T  # (batch, q)
-            cos[labels[:, None] == q_labels[None, :]] = -np.inf
-            top = min(k, len(ids))
-            idx = np.argpartition(-cos, top - 1, axis=0)[:top]
-            flat_cos = np.take_along_axis(cos, idx, axis=0).T.ravel()
-            out = pd.DataFrame(
-                {
-                    q_id_col: np.repeat(q_ids, top),
-                    "neighbor_id": ids[idx].T.ravel(),
-                    "cos": flat_cos,
-                }
-            )
-            yield out[np.isfinite(flat_cos)]
-
-    cand = (
-        corpus.select(id_col, vec_col, label_col)
-        .filter(F.col(label_col).isNotNull())
-        .mapInPandas(
-            batches, schema=f"{q_id_col} bigint, neighbor_id bigint, cos double"
-        )
+    return _matmul_topk(
+        corpus, queries, k, "hard_negative_topk_matmul",
+        (id_col, vec_col, q_id_col, q_vec_col), (label_col, q_label_col),
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double_array, cosine_similarity
 from ..operators.topk import (
-    brute_force_topk,
     brute_force_topk_matmul,
     hard_negative_topk_matmul,
     lsh_bucketed_topk,
@@ -110,8 +109,9 @@ _IVF_ORACLE_SQL = """
 
 @member(
     "embedding_knn_topk",
-    doc="T2/J8 exact cosine top-k (00101:86-96): crossJoin(broadcast("
-    "queries)) + per-query rank; deterministic tie-break (cos desc, id).",
+    doc="T2/J8 exact cosine top-k (00101:86-96): one BLAS matmul per "
+    "Arrow batch against the collected queries + per-query rank; "
+    "deterministic tie-break (cos desc, id).",
     oracle="""
     WITH q AS (
       SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
@@ -133,8 +133,7 @@ _IVF_ORACLE_SQL = """
 )
 def embedding_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact brute force via the BLAS path (4.6x the Catalyst-expression
-    # form, bit-identical ranks on the testdata); brute_force_topk is
-    # the pure-expression fallback with the same contract
+    # form, bit-identical ranks on the testdata)
     emb = load_table(spark, sf_dir, "embeddings")
     out = brute_force_topk_matmul(emb, _queries_df(emb), k=5)
     return out.select(

@@ -452,12 +452,22 @@ _BAD_VECTORS = {
 
 
 @pytest.mark.parametrize("case", sorted(_BAD_VECTORS))
-@pytest.mark.parametrize("kernel", ["kmeans_cells", "_pq_reconstruct", "ivf_pq_probe"])
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        "kmeans_cells",
+        "_pq_reconstruct",
+        "ivf_pq_probe",
+        "brute_force_topk_matmul",
+        "hard_negative_topk_matmul",
+    ],
+)
 def test_vector_kernels_reject_null_and_ragged_rows(spark, kernel, case):
     """A null or wrong-length vector must fail DETERMINISTICALLY in
     every Arrow kernel (a silent reshape would misalign every later
     row of the batch), not produce wrong cells. One partition, so all
     four rows share one Arrow batch."""
+    from japanstockdatapipeline_spark.operators import topk
     from japanstockdatapipeline_spark.operators.kmeans import (
         _pq_reconstruct,
         ivf_pq_probe,
@@ -466,7 +476,14 @@ def test_vector_kernels_reject_null_and_ragged_rows(spark, kernel, case):
     df = spark.createDataFrame(
         list(enumerate(_BAD_VECTORS[case])), "vec_id long, embedding array<double>"
     ).coalesce(1)
-    if kernel == "kmeans_cells":
+    queries = spark.createDataFrame(
+        [(9, [1.0, 0.0], 2)], "q_id long, q_vec array<double>, q_label long"
+    )
+    if kernel == "brute_force_topk_matmul":
+        out = topk.brute_force_topk_matmul(df, queries.drop("q_label"), k=2)
+    elif kernel == "hard_negative_topk_matmul":
+        out = topk.hard_negative_topk_matmul(df.withColumn("label", F.lit(1)), queries, k=2)
+    elif kernel == "kmeans_cells":
         out = kmeans_cells(df, k=2, iters=1)
     elif kernel == "_pq_reconstruct":
         out = _pq_reconstruct(df, m=1, k=2, iters=1, dim=2)
@@ -478,10 +495,77 @@ def test_vector_kernels_reject_null_and_ragged_rows(spark, kernel, case):
             F.col("embedding").alias("__recon"),
         )
         cents = spark.createDataFrame([(0, [1.0, 0.0])], "cell int, __centroid array<double>")
-        queries = spark.createDataFrame([(9, [1.0, 0.0])], "q_id long, q_vec array<double>")
-        out = ivf_pq_probe(corpus, cents, queries, df, k=2, candidates=4, n_probe=1)
+        out = ivf_pq_probe(
+            corpus, cents, queries.drop("q_label"), df, k=2, candidates=4, n_probe=1
+        )
     with pytest.raises(Exception, match="needs non-null vectors of dim 2"):
         out.collect()
+
+
+_BAD_QUERIES = {"null_query": [[1.0, 0.0], None], "ragged_query": [[1.0, 0.0], [1.0]]}
+
+
+@pytest.mark.parametrize("case", [*sorted(_BAD_QUERIES), "no_queries"])
+@pytest.mark.parametrize("kernel", ["brute_force_topk_matmul", "hard_negative_topk_matmul"])
+def test_matmul_topk_query_side_inputs(spark, kernel, case):
+    """The queries are collected when the frame is built: a null or
+    ragged query vector raises a ValueError that names the operator,
+    and an empty query set yields an empty (q_id, neighbor_id, cos,
+    rank) frame, as brute_force_topk does."""
+    from japanstockdatapipeline_spark.operators import topk
+
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1), (1, [0.0, 1.0], 1)],
+        "vec_id long, embedding array<double>, label long",
+    )
+    queries = spark.createDataFrame(
+        [(10 + i, v, 2) for i, v in enumerate(_BAD_QUERIES.get(case, []))],
+        "q_id long, q_vec array<double>, q_label long",
+    )
+    if kernel == "brute_force_topk_matmul":
+        queries = queries.drop("q_label")
+    if case == "no_queries":
+        out = getattr(topk, kernel)(corpus, queries, k=1)
+        assert out.columns == ["q_id", "neighbor_id", "cos", "rank"]
+        assert out.collect() == []
+        return
+    with pytest.raises(ValueError, match=kernel):
+        getattr(topk, kernel)(corpus, queries, k=1)
+
+
+def test_topk_kernels_break_ties_by_ascending_id(spark):
+    """Nine identical vectors in one Arrow batch, ids written in
+    descending order: every top-k kernel returns the ascending-id
+    neighbours the expression form returns, since the per-batch cut
+    keeps boundary ties by (score, id) rather than an arbitrary subset
+    of the tied rows."""
+    from japanstockdatapipeline_spark.operators.kmeans import pq_adc_topk
+    from japanstockdatapipeline_spark.operators.topk import (
+        brute_force_topk_matmul,
+        hard_negative_topk_matmul,
+    )
+
+    v = [float(x) for x in range(1, 9)]
+    corpus = spark.createDataFrame(
+        [(i, v, 1) for i in range(9, 0, -1)],
+        "vec_id long, embedding array<double>, label long",
+    ).coalesce(1)
+    queries = spark.createDataFrame(
+        [(100, v, 2)], "q_id long, q_vec array<double>, q_label long"
+    )
+    plain = queries.drop("q_label")
+
+    def neighbours(df):
+        return [r["neighbor_id"] for r in df.orderBy("rank").collect()]
+
+    expected = neighbours(brute_force_topk(corpus, plain, k=2))
+    assert expected == [1, 2]
+    assert neighbours(brute_force_topk_matmul(corpus, plain, k=2)) == expected
+    assert neighbours(hard_negative_topk_matmul(corpus, queries, k=2)) == expected
+    assert (
+        neighbours(pq_adc_topk(corpus, plain, k=2, m=2, k_cells=2, iters=1, dim=8))
+        == expected
+    )
 
 
 def test_pq_blas_sampled_covering_sample_is_identity(spark, clustered):

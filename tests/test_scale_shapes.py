@@ -118,7 +118,7 @@ def test_partition_pruning_on_gold_tables(spark, sf_dir, tmp_path):
 # at plan-construction time; each is bounded by construction:
 # - embedding_knn_topk: the BLAS matmul path collects the QUERY matrix
 #   (small by construction — never the corpus) to broadcast into the
-#   mapInPandas closure; ann_topk_panel contains it.
+#   mapInArrow closure; ann_topk_panel contains it.
 # - doc_dup_clusters / corpus_prep_pipeline: iterative label
 #   propagation — the per-round convergence check IS the algorithm
 #   (runs on the pruned pair graph, not the corpus); doc_feature_panel
@@ -133,7 +133,7 @@ PLAN_TIME_JOB_ALLOWLIST = {
     "embedding_matryoshka_topk",
     # round 11: the BLAS ADC probe collects the PROBE ASSIGNMENT
     # (O(queries * n_probe) rows — query-side bounded, never the
-    # corpus) into the mapInPandas closure, same shape as the knn
+    # corpus) into the mapInArrow closure, same shape as the knn
     # query-matrix collect above
     "embedding_ivfpq_topk",
     "embedding_ivfadc_topk",
@@ -143,8 +143,10 @@ PLAN_TIME_JOB_ALLOWLIST = {
     "embedding_kmeans_cells",  # k=8: 8 seed rows + 8 centroid rows
     "embedding_ivf_kmeans_topk",  # the same k=8 quantizer collects
     "embedding_pq_codes",  # k=16: 16 seed rows + 8*16 sub-centroid rows
-    "embedding_pq_adc_topk",  # the same PQ codebook collects
-    "embedding_pq_rerank_topk",  # the same PQ codebook collects
+    # the same PQ codebook collects, plus the bounded query collect of
+    # the ADC pass (the whole coded corpus is one probed cell)
+    "embedding_pq_adc_topk",
+    "embedding_pq_rerank_topk",  # pq_adc_topk's collects, as above
     "ann_topk_panel",
     "doc_dup_clusters",
     "corpus_prep_pipeline",

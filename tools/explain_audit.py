@@ -47,7 +47,8 @@ CHECKS = {
         ("hashpartitioning\\(user_id", True, "one shuffle on entity key"),
     ],
     "embedding_knn_topk": [
-        ("MapInPandas", True, "BLAS matmul path: corpus streamed in Arrow batches"),
+        (r"\A(?!.*\(\d+\) MapInArrow.*\(\d+\) MapInArrow).*\(\d+\) MapInArrow", True,
+         "BLAS matmul path: corpus streamed through one MapInArrow pass"),
         ("SortMergeJoin|ShuffledHashJoin", False, "no join: candidates re-ranked by window"),
     ],
     "doc_ngram_jaccard_dups": [
@@ -204,7 +205,8 @@ CHECKS = {
     ],
     "embedding_pq_adc_topk": [
         ("CartesianProduct", False, "query side is bounded and broadcast, never a shuffled product"),
-        ("BroadcastExchange|BroadcastNestedLoopJoin", True, "codebook + query rows broadcast"),
+        ("BroadcastExchange|BroadcastNestedLoopJoin", True,
+         "query vectors + ADC shortlist broadcast into the true-cosine join-back"),
         ("hashpartitioning\\(vec_id", False, "no corpus shuffle on the vector id"),
     ],
     "embedding_pq_rerank_topk": [
